@@ -8,22 +8,25 @@ PARAMETERIZED statements.
 
 Two strategies:
 
-- ``foreach_partition_write``: each partition opens its own DBAPI
-  connection (via a picklable ``connect_fn``) and executes
-  parameterized ``executemany`` batches of ``batch_size`` rows
-  (default 10k, the reference's pg_batch_size, src/main.rs:359) in a
-  per-partition transaction. Executor-parallel — N partitions write
-  concurrently vs the reference's single serialized pool.
+- ``apply_changeset`` / ``foreach_partition_write``: each non-empty
+  partition opens its own DBAPI connection (via a picklable
+  ``connect_fn``) and executes parameterized ``executemany`` batches
+  of ``batch_size`` rows (default 10k, the reference's pg_batch_size,
+  src/main.rs:359) in a per-partition transaction. Executor-parallel —
+  N partitions write concurrently vs the reference's single
+  serialized pool. A change-set's inserts, updates and deletes go out
+  in one job.
 
-- ``stage_and_merge``: write the change-set to a staging table
-  (``df.write.jdbc`` append — Spark-native, parallel), then issue one
-  set-based MERGE/UPDATE…FROM/DELETE…USING on the target. One
-  transaction, exactly-once-ish visibility; the preferred 100 TB
+- ``merge_changeset``: the same change-set is loaded into a staging
+  table in parallel, then ``merge_stage_into_target`` runs one
+  set-based UPDATE…FROM / INSERT…SELECT / DELETE…IN on the target.
+  One transaction, exactly-once-ish visibility; the preferred 100 TB
   shape (the per-row path holds locks longer and retries
   non-atomically).
 
-Tests run the DBAPI path against sqlite/duckdb in-process (no PG in
-the container); the SQL templates are ANSI and PG-compatible.
+Tests run the DBAPI path against sqlite/duckdb in-process and, with
+``dialect="pg"``, against a throwaway PostgreSQL server
+(tests/test_pg_roundtrip.py).
 
 DDL bootstrap mirrors src/db_utils.rs:84-144 with
 ``last_updated_at`` maintained by the sink itself instead of a
@@ -32,10 +35,13 @@ trigger (SURVEY §1.1).
 
 from __future__ import annotations
 
+import itertools
 import time
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
+
+from fhir2sql_spark.sinks import pg_dialect
 
 MIRROR_DDL = """
 CREATE TABLE IF NOT EXISTS {table} (
@@ -52,6 +58,12 @@ UPDATE_SQL = (
     " WHERE id = ?"
 )
 DELETE_SQL = "DELETE FROM {table} WHERE id = ?"
+
+# (insert, update, delete) per sink dialect.
+_CHANGE_SQL = {
+    "ansi": (INSERT_SQL, UPDATE_SQL, DELETE_SQL),
+    "pg": (pg_dialect.PG_INSERT_SQL, pg_dialect.PG_UPDATE_SQL, pg_dialect.PG_DELETE_SQL),
+}
 
 
 def connect_with_retry(
@@ -73,6 +85,18 @@ def connect_with_retry(
     raise RuntimeError("unreachable")
 
 
+def _execute(connect_fn: Callable[[], object], *statements: str) -> None:
+    """Run ``statements`` on one fresh connection, then commit."""
+    conn = connect_fn()
+    try:
+        cur = conn.cursor()
+        for sql in statements:
+            cur.execute(sql)
+        conn.commit()
+    finally:
+        conn.close()
+
+
 def create_mirror_tables(
     connect_fn: Callable[[], object],
     tables: Sequence[str],
@@ -83,27 +107,19 @@ def create_mirror_tables(
     installs the ``update_last_updated()`` plpgsql trigger pair on
     each table (src/db_utils.rs:112-134) — idempotent via
     CREATE OR REPLACE FUNCTION + drop-then-create trigger."""
-    conn = connect_fn()
-    try:
-        cur = conn.cursor()
-        if dialect == "pg":
-            from fhir2sql_spark.sinks.pg_dialect import pg_statements
-
-            for t in tables:
-                st = pg_statements(t)
-                cur.execute(st["ddl"])
-                cur.execute(st["touch_fn"])
-                cur.execute(
-                    f"DROP TRIGGER IF EXISTS update_last_updated_trigger"
-                    f" ON {t}"  # noqa: S608
-                )
-                cur.execute(st["touch_trigger"])
-        else:
-            for t in tables:
-                cur.execute(MIRROR_DDL.format(table=t))
-        conn.commit()
-    finally:
-        conn.close()
+    if dialect == "pg":
+        ddl = []
+        for t in tables:
+            st = pg_dialect.pg_statements(t)
+            ddl += [
+                st["ddl"],
+                st["touch_fn"],
+                f"DROP TRIGGER IF EXISTS update_last_updated_trigger ON {t}",  # noqa: S608
+                st["touch_trigger"],
+            ]
+    else:
+        ddl = [MIRROR_DDL.format(table=t) for t in tables]
+    _execute(connect_fn, *ddl)
 
 
 def table_exists(connect_fn: Callable[[], object], table: str) -> bool:
@@ -129,80 +145,103 @@ def foreach_partition_write(
     retry_attempts: int = 3,
     retry_backoff_s: float = 1.0,
 ) -> None:
-    """Executor-side parameterized writes: one connection + one
-    transaction per partition, executemany per batch_size rows.
-    Row tuples are taken positionally from the DataFrame columns, so
-    the caller selects columns in the placeholder order."""
+    """Executor-side parameterized writes of one statement. Row tuples
+    are taken positionally from the DataFrame columns, so the caller
+    selects columns in the placeholder order."""
+    _foreach_partition_tx(
+        df, _executemany(lambda row: (sql, tuple(row)), batch_size),
+        connect_fn, retry_attempts, retry_backoff_s,
+    )
 
-    def write_partition(rows) -> None:
+
+def _foreach_partition_tx(
+    df: DataFrame,
+    write: Callable[[object, Iterator], None],
+    connect_fn: Callable[[], object],
+    retry_attempts: int = 3,
+    retry_backoff_s: float = 1.0,
+) -> None:
+    """``write(conn, rows)`` for every non-empty partition on its own
+    connection, in one transaction; an empty partition opens none."""
+
+    def run(rows) -> None:
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is None:
+            return
         conn = connect_with_retry(connect_fn, attempts=retry_attempts,
                                   backoff_s=retry_backoff_s)
         try:
-            cur = conn.cursor()
-            batch = []
-            for row in rows:
-                batch.append(tuple(row))
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
-                    batch = []
-            if batch:
-                cur.executemany(sql, batch)
+            write(conn, itertools.chain([first], rows))
             conn.commit()
         except Exception:
-            try:
-                conn.rollback()
-            finally:
-                pass
+            conn.rollback()
             raise
         finally:
             conn.close()
 
-    df.foreachPartition(write_partition)
+    df.foreachPartition(run)
+
+
+def _executemany(
+    route: Callable[[object], tuple[str, tuple]], batch_size: int
+) -> Callable[[object, Iterator], None]:
+    """A partition writer: ``route`` maps each row to its (statement,
+    params); rows are batched per statement and sent with executemany
+    every ``batch_size`` rows."""
+
+    def write(conn, rows) -> None:
+        cur = conn.cursor()
+        batches: dict[str, list[tuple]] = {}
+        for row in rows:
+            sql, params = route(row)
+            batch = batches.setdefault(sql, [])
+            batch.append(params)
+            if len(batch) >= batch_size:
+                cur.executemany(sql, batch)
+                batches[sql] = []
+        for sql, batch in batches.items():
+            if batch:
+                cur.executemany(sql, batch)
+
+    return write
 
 
 def apply_changeset(
-    inserts: DataFrame,
-    updates: DataFrame,
-    deletes: DataFrame,
+    changes: DataFrame,
     table: str,
     connect_fn: Callable[[], object],
     batch_size: int = 10_000,
     dialect: str = "ansi",
 ) -> None:
-    """Apply a CDC change-set (reference flush semantics,
-    src/main.rs:250-282, with independent batch boundaries — the
-    reference's coupled else-if flush is a documented quirk we do NOT
-    replicate, SURVEY §2.1).
-
-    inserts: (pk_id, resource); updates: (resource, pk_id);
-    deletes: (pk_id,).
+    """Apply a CDC change-set of ``(op, pk_id, resource)`` rows, ``op``
+    one of 'insert' / 'update' / 'delete' (``resource`` is ignored for
+    deletes), in ONE ``foreachPartition`` job: each partition runs its
+    inserts, updates and deletes in one transaction, with independent
+    batch boundaries per statement (reference flush semantics,
+    src/main.rs:250-282 — the reference's coupled else-if flush is a
+    documented quirk we do NOT replicate, SURVEY §2.1).
 
     ``dialect="pg"`` swaps in the PostgreSQL statements
     (sinks/pg_dialect.py — %s paramstyle, ::jsonb casts; same
     positional tuple contract, golden-pinned + grammar-validated in
     tests/test_pg_dialect.py). ``connect_fn`` is then expected to be a
     psycopg-style factory."""
-    if dialect == "pg":
-        from fhir2sql_spark.sinks.pg_dialect import (
-            PG_DELETE_SQL,
-            PG_INSERT_SQL,
-            PG_UPDATE_SQL,
-        )
-
-        ins, upd, dele = PG_INSERT_SQL, PG_UPDATE_SQL, PG_DELETE_SQL
-    elif dialect == "ansi":
-        ins, upd, dele = INSERT_SQL, UPDATE_SQL, DELETE_SQL
-    else:
+    if dialect not in _CHANGE_SQL:
         raise ValueError(f"unknown sink dialect {dialect!r}")
-    foreach_partition_write(
-        inserts, ins.format(table=table), connect_fn, batch_size
-    )
-    foreach_partition_write(
-        updates, upd.format(table=table), connect_fn, batch_size
-    )
-    foreach_partition_write(
-        deletes, dele.format(table=table), connect_fn, batch_size
-    )
+    ins, upd, dele = (s.format(table=table) for s in _CHANGE_SQL[dialect])
+
+    def route(row) -> tuple[str, tuple]:
+        op, pk_id, resource = row
+        if op == "insert":
+            return ins, (pk_id, resource)
+        if op == "update":
+            return upd, (resource, pk_id)
+        if op == "delete":
+            return dele, (pk_id,)
+        raise ValueError(f"unknown change-set op {op!r}")
+
+    _foreach_partition_tx(changes, _executemany(route, batch_size), connect_fn)
 
 
 def copy_partition_write(
@@ -224,43 +263,62 @@ def copy_partition_write(
     throwaway cluster, a ~23× speedup (SCALE.md "PG sink bulk-load").
     Executor-parallel like foreach_partition_write — N partitions COPY
     concurrently."""
-
-    def write_partition(rows) -> None:
-        conn = connect_with_retry(connect_fn, attempts=retry_attempts,
-                                  backoff_s=retry_backoff_s)
-        try:
-            conn.copy_rows(table, columns, (tuple(r) for r in rows))
-            conn.commit()
-        except Exception:
-            try:
-                conn.rollback()
-            finally:
-                pass
-            raise
-        finally:
-            conn.close()
-
-    df.foreachPartition(write_partition)
+    _foreach_partition_tx(
+        df,
+        lambda conn, rows: conn.copy_rows(table, columns, (tuple(r) for r in rows)),
+        connect_fn, retry_attempts, retry_backoff_s,
+    )
 
 
 # --- staging + set-based merge (the scale path) ---------------------
 
-MERGE_FROM_STAGE_SQL = """
-UPDATE {table} SET resource = s.resource,
-                   last_updated_at = CURRENT_TIMESTAMP
+MERGE_FROM_STAGE_SQL = """UPDATE {table} SET resource = s.resource,
+    last_updated_at = CURRENT_TIMESTAMP
 FROM {stage} s
-WHERE {table}.id = s.pk_id AND s.op = 'update'
-"""
+WHERE {table}.id = s.pk_id AND s.op = 'update'"""
 
-INSERT_FROM_STAGE_SQL = """
-INSERT INTO {table} (id, resource)
-SELECT s.pk_id, s.resource FROM {stage} s WHERE s.op = 'insert'
-"""
+INSERT_FROM_STAGE_SQL = """INSERT INTO {table} (id, resource)
+SELECT s.pk_id, s.resource FROM {stage} s WHERE s.op = 'insert'"""
 
-DELETE_FROM_STAGE_SQL = """
-DELETE FROM {table}
-WHERE id IN (SELECT s.pk_id FROM {stage} s WHERE s.op = 'delete')
-"""
+DELETE_FROM_STAGE_SQL = """DELETE FROM {table}
+WHERE id IN (SELECT s.pk_id FROM {stage} s WHERE s.op = 'delete')"""
+
+# (update, insert, delete) from the stage, per sink dialect.
+_STAGE_SQL = {
+    "ansi": (MERGE_FROM_STAGE_SQL, INSERT_FROM_STAGE_SQL, DELETE_FROM_STAGE_SQL),
+    "pg": (
+        pg_dialect.PG_MERGE_FROM_STAGE_SQL,
+        pg_dialect.PG_INSERT_FROM_STAGE_SQL,
+        pg_dialect.PG_DELETE_FROM_STAGE_SQL,
+    ),
+}
+
+
+def merge_changeset(
+    changes: DataFrame,
+    table: str,
+    connect_fn: Callable[[], object],
+    batch_size: int = 10_000,
+    dialect: str = "ansi",
+) -> None:
+    """The set-based form of ``apply_changeset``: load the same
+    ``(op, pk_id, resource)`` change-set into ``<table>__stage`` in one
+    parallel job, then apply it to ``table`` in one transaction."""
+    stage = f"{table}__stage"
+    _execute(
+        connect_fn,
+        f"DROP TABLE IF EXISTS {stage}",  # noqa: S608
+        f"CREATE TABLE {stage} (pk_id INT, op TEXT, resource TEXT)",  # noqa: S608
+    )
+    ph = "%s, %s, %s" if dialect == "pg" else "?, ?, ?"
+    foreach_partition_write(
+        changes.select("pk_id", "op", "resource"),
+        f"INSERT INTO {stage} (pk_id, op, resource) VALUES ({ph})",  # noqa: S608
+        connect_fn,
+        batch_size,
+    )
+    merge_stage_into_target(connect_fn, table, stage, dialect=dialect)
+    _execute(connect_fn, f"DROP TABLE IF EXISTS {stage}")  # noqa: S608
 
 
 def merge_stage_into_target(
@@ -270,8 +328,8 @@ def merge_stage_into_target(
     dialect: str = "ansi",
 ) -> None:
     """One set-based transaction applying a staged change-set. The
-    stage table holds (pk_id, op, resource) loaded in parallel by
-    ``df.write`` beforehand.
+    stage table holds (pk_id, op, resource) loaded in parallel
+    beforehand.
 
     The guarded BEGIN makes the three statements one transaction on
     autocommit-by-default engines (DuckDB's DBAPI); python sqlite3
@@ -282,24 +340,6 @@ def merge_stage_into_target(
     ``dialect="pg"`` swaps in the PostgreSQL stage statements (the
     ``::jsonb`` casts a JSONB target column requires — PG has no
     implicit text->jsonb assignment cast)."""
-    if dialect == "pg":
-        from fhir2sql_spark.sinks.pg_dialect import (
-            PG_DELETE_FROM_STAGE_SQL,
-            PG_INSERT_FROM_STAGE_SQL,
-            PG_MERGE_FROM_STAGE_SQL,
-        )
-
-        merge_sql, ins_sql, del_sql = (
-            PG_MERGE_FROM_STAGE_SQL,
-            PG_INSERT_FROM_STAGE_SQL,
-            PG_DELETE_FROM_STAGE_SQL,
-        )
-    else:
-        merge_sql, ins_sql, del_sql = (
-            MERGE_FROM_STAGE_SQL,
-            INSERT_FROM_STAGE_SQL,
-            DELETE_FROM_STAGE_SQL,
-        )
     conn = connect_fn()
     try:
         cur = conn.cursor()
@@ -307,15 +347,11 @@ def merge_stage_into_target(
             cur.execute("BEGIN")
         except Exception:
             pass
-        cur.execute(merge_sql.format(table=table, stage=stage))
-        cur.execute(ins_sql.format(table=table, stage=stage))
-        cur.execute(del_sql.format(table=table, stage=stage))
+        for sql in _STAGE_SQL["pg" if dialect == "pg" else "ansi"]:
+            cur.execute(sql.format(table=table, stage=stage))
         conn.commit()
     except Exception:
-        try:
-            conn.rollback()
-        finally:
-            pass
+        conn.rollback()
         raise
     finally:
         conn.close()

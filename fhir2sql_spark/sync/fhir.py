@@ -11,7 +11,7 @@ stage-level fail-fast — SURVEY §2.1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,10 +31,15 @@ def extract_versions(resources: DataFrame, resource_col: str = "resource") -> Da
     )
 
 
+def is_well_formed() -> Column:
+    """A resource is well-formed iff both id and versionId extracted
+    (get_version() -> Some, src/main.rs:41-45)."""
+    return F.col("res_key").isNotNull() & F.col("src_version").isNotNull()
+
+
 def partition_malformed(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(well_formed, malformed): a resource is well-formed iff both id
-    and versionId extracted (get_version() -> Some, src/main.rs:41-45)."""
-    ok = F.col("res_key").isNotNull() & F.col("src_version").isNotNull()
+    """(well_formed, malformed), split by ``is_well_formed``."""
+    ok = is_well_formed()
     return extracted.where(ok), extracted.where(~ok)
 
 

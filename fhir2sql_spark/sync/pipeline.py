@@ -1,11 +1,12 @@
 """The sync pipeline — the fhir2sql-equivalent product (SURVEY §7 M4).
 
-Orchestrates: source scan (bundle pages) -> version extraction ->
-distributed diff vs the mirror snapshot -> parameterized sink
-(insert/update/delete) -> count reconciliation; per-resource-type,
-mirroring ``run_sync`` / ``sync_blaze_2_pg``
-(/root/reference/src/main.rs:176-339) with the driver-side BTreeMap
-replaced by the shuffle/broadcast join in sync/diff.py.
+Per resource type, mirroring the reference's ``run_sync`` /
+``sync_blaze_2_pg`` (src/main.rs:176-339), in ONE pass over the source:
+bundle pages -> version extraction -> distributed diff vs the mirror
+snapshot (the driver-side BTreeMap replaced by the join in
+sync/diff.py) -> one summary collect (op counts, pk allocation) -> one
+parameterized apply job (insert/update/delete) -> count
+reconciliation.
 
 Invariants (property-tested in tests/test_sync_properties.py, from
 the reference's doc comment src/main.rs:159-175):
@@ -21,15 +22,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.sinks import jdbc_upsert
+from fhir2sql_spark.sync.diff import OP_DELETE, OP_INSERT, OP_NOOP, OP_UPDATE, diff_snapshots
+from fhir2sql_spark.sync.fhir import extract_versions, is_well_formed, partition_malformed
 
 # Parallelism of insert-pk allocation (buckets = concurrent tasks).
 _PK_BUCKETS = 64
-from fhir2sql_spark.sync.diff import OP_DELETE, OP_INSERT, OP_NOOP, OP_UPDATE, diff_snapshots
-from fhir2sql_spark.sync.fhir import extract_versions, partition_malformed
 
 
 @dataclass
@@ -49,16 +50,19 @@ class SyncStats:
         return self.source_count == self.mirror_count_after
 
 
+def _mirror_pk(mirror_raw: DataFrame) -> Column:
+    """The mirror's pk column; either name plugs in, so a raw
+    ``SELECT id, resource`` JDBC frame works unchanged."""
+    return F.col("pk_id" if "pk_id" in mirror_raw.columns else "id").cast("int")
+
+
 def extract_mirror_versions(mirror_raw: DataFrame) -> DataFrame:
     """(pk_id|id, resource) -> (pk_id, res_key, mir_version), fully
     distributed — the version-extraction half of the reference's
-    full-scan + BTreeMap build (src/main.rs:49-75). Accepts either
-    column name for the pk so a raw ``SELECT id, resource`` JDBC frame
-    plugs in unchanged. Unparseable rows are skipped (src/main.rs:60-63)
-    via the null-extraction filter."""
-    id_col = "pk_id" if "pk_id" in mirror_raw.columns else "id"
+    full-scan + BTreeMap build (src/main.rs:49-75). Unparseable rows
+    are skipped (src/main.rs:60-63) via the null-extraction filter."""
     ext = mirror_raw.select(
-        F.col(id_col).cast("int").alias("pk_id"),
+        _mirror_pk(mirror_raw).alias("pk_id"),
         F.get_json_object("resource", "$.id").alias("res_key"),
         F.get_json_object("resource", "$.meta.versionId")
         .try_cast("long")
@@ -72,14 +76,14 @@ def extract_mirror_versions(mirror_raw: DataFrame) -> DataFrame:
 def read_mirror_versions(
     spark: SparkSession, connect_fn: Callable[[], object], table: str
 ) -> DataFrame:
-    """TEST-ONLY mirror snapshot: fetches the whole table through one
-    driver-side connection (the in-process sqlite/duckdb databases are
-    not visible to executors). This inherits the reference's BTreeMap
-    scale ceiling by construction — production syncs must pass
-    ``mirror_df`` to ``sync_resources`` (built from
-    ``sources.jdbc.mirror_reader``'s range-partitioned read, or any
-    distributed source) so the mirror never materializes on the
-    driver."""
+    """TEST-ONLY raw mirror snapshot ``(pk_id, resource)``: fetches
+    the whole table through one driver-side connection (the in-process
+    sqlite/duckdb databases are not visible to executors). This
+    inherits the reference's BTreeMap scale ceiling by construction —
+    production syncs must pass ``mirror_df`` to ``sync_resources``
+    (built from ``sources.jdbc.mirror_reader``'s range-partitioned
+    read, or any distributed source) so the mirror never materializes
+    on the driver."""
     conn = connect_fn()
     try:
         cur = conn.cursor()
@@ -89,8 +93,7 @@ def read_mirror_versions(
         conn.close()
     # normalize across drivers (the psql adapter fetches text)
     rows = [(int(r[0]), str(r[1])) for r in rows or []]
-    df = spark.createDataFrame(rows or [], "pk_id int, resource string")
-    return extract_mirror_versions(df)
+    return spark.createDataFrame(rows, "pk_id int, resource string")
 
 
 def sync_resources(
@@ -104,146 +107,101 @@ def sync_resources(
     mirror_df: DataFrame | None = None,
     dialect: str = "ansi",
 ) -> SyncStats:
-    """One full sync of raw source resources into the mirror table.
+    """One full sync of raw source resources into the mirror table, in
+    one pass: the source is scanned ONCE, into the cached ``tagged``
+    diff, while an ``Observation`` on the extracted frame counts
+    well-formed and malformed resources; ONE summary ``collect`` over
+    ``tagged`` (unioned with the raw mirror pks) yields the op counts,
+    the insert-bucket counts and the max pk; ONE ``foreachPartition``
+    job applies the ``(op, pk_id, resource)`` change-set.
 
-    ``dialect="pg"`` routes every emitted statement through the
-    PostgreSQL dialect (%s paramstyle, ::jsonb casts — see
-    sinks/pg_dialect.py); wire-verified against a real server in
-    tests/test_pg_roundtrip.py.
+    ``strategy``: 'batched' = per-partition parameterized executemany
+    (parallel, independent transactions — the reference's flush model
+    done right); 'merge' = stage the same change-set, then ONE
+    set-based transaction applies it (atomic visibility).
+
+    ``dialect="pg"`` routes every statement through the PostgreSQL
+    dialect (sinks/pg_dialect.py — %s paramstyle, ::jsonb casts);
+    wire-verified against a real server in tests/test_pg_roundtrip.py.
 
     ``mirror_df`` is the PRODUCTION mirror-read seam: a distributed
     (pk_id|id, resource) DataFrame — typically
     ``sources.jdbc.mirror_reader(spark, cfg, lo, hi).load()``, a
-    range-partitioned parallel JDBC scan — from which versions are
-    extracted executor-side. When omitted, the test-only
-    ``read_mirror_versions`` driver fetch is used (in-process
-    databases are invisible to executors). This seam is what kills
-    the reference's driver-memory BTreeMap ceiling (src/main.rs:49-75):
-    with it, no step of the diff ever materializes the mirror on the
-    driver.
+    range-partitioned parallel JDBC scan — so no step of the sync
+    materializes the mirror on the driver (the reference's BTreeMap
+    ceiling, src/main.rs:49-75). When omitted, the test-only
+    ``read_mirror_versions`` driver fetch is used.
 
-    ``apply_deletes=False`` is the INCREMENTAL form: when the source
-    DataFrame is one micro-batch (a page window, not the full
-    snapshot), absence from the batch does not mean deletion, so
-    mirror-only rows are left untouched and reported as 0 deletes.
-    Continuous pipelines (streaming/continuous_sync.py) run upsert-only
-    micro-batches plus a periodic full-snapshot pass for deletes.
+    ``apply_deletes=False`` is the INCREMENTAL form for one micro-batch
+    (streaming/continuous_sync.py): absence from the batch does not
+    mean deletion, so mirror-only rows are left untouched and reported
+    as 0 deletes; a periodic full-snapshot pass reconciles deletes.
 
     Source-wins semantics: ANY version difference overwrites with the
-    source copy (the reference's `<`||`>`, src/main.rs:229-230).
-
-    ``strategy``: 'batched' = per-partition parameterized executemany
-    (parallel, independent transactions — the reference's flush model
-    done right); 'merge' = load the tagged change-set into a staging
-    table, then ONE set-based transaction applies update/insert/delete
-    (atomic visibility — the preferred shape when the target supports
-    it)."""
-    extracted = extract_versions(source_resources)
-    well_formed, malformed = partition_malformed(extracted)
-    n_malformed = malformed.count()
-
-    if mirror_df is not None:
-        mirror = extract_mirror_versions(mirror_df)
-    else:
-        mirror = read_mirror_versions(spark, connect_fn, table)
+    source copy (the reference's `<`||`>`, src/main.rs:229-230)."""
+    seen = Observation()
+    ok = is_well_formed()
+    extracted = extract_versions(source_resources).observe(
+        seen, F.count_if(ok).alias("source_count"), F.count_if(~ok).alias("malformed")
+    )
+    well_formed, _ = partition_malformed(extracted)
+    if mirror_df is None:
+        mirror_df = read_mirror_versions(spark, connect_fn, table)
+    mirror = extract_mirror_versions(mirror_df)
     tagged = diff_snapshots(
         well_formed.select("res_key", "src_version", "resource"),
         mirror.select("res_key", "mir_version", "pk_id"),
     ).cache()
-
-    # New pks for inserts: allocated deterministically above the
-    # current max (the reference lets SERIAL do this; a distributed
-    # sink needs explicit allocation to stay parallel). Allocation is
-    # bucket-parallel: an unpartitioned row_number would pull every
-    # insert through ONE task — on an initial full load that
-    # serializes the whole dataset (round-1 advisor finding). Instead
-    # hash res_key into _PK_BUCKETS buckets, row_number inside each
-    # bucket (distributed), and add per-bucket offsets computed from
-    # bucket counts (a _PK_BUCKETS-row driver-side cumsum). Ids are
-    # dense in (bucket, res_key) order — deterministic across runs
-    # and retries, just not globally res_key-sorted.
-    max_pk = (mirror.agg(F.max("pk_id")).collect()[0][0]) or 0
-    bucketed = tagged.where(F.col("op") == OP_INSERT).withColumn(
-        "__bucket", F.pmod(F.xxhash64("res_key"), F.lit(_PK_BUCKETS)).cast("int")
-    )
-    counts = {
-        r["__bucket"]: r["n"]
-        for r in bucketed.groupBy("__bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    offset_col = F.coalesce(
-        *[F.when(F.col("__bucket") == b, F.lit(off)) for b, off in offsets.items()],
-        F.lit(0),
-    ) if offsets else F.lit(0)
-    w_bucket = Window.partitionBy("__bucket").orderBy("res_key")
-    inserts = (
-        bucketed.withColumn(
-            "pk_id",
-            (F.row_number().over(w_bucket) + offset_col + F.lit(max_pk)).cast("int"),
-        )
-        .select("pk_id", "resource")
-    )
-    updates = tagged.where(F.col("op") == OP_UPDATE).select("resource", "pk_id")
-    deletes = tagged.where(F.col("op") == OP_DELETE).select("pk_id")
-    if not apply_deletes:
-        deletes = deletes.limit(0)
-
-    stats_rows = {
-        r["op"]: r["n"]
-        for r in tagged.groupBy("op").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not apply_deletes:
-        stats_rows[OP_DELETE] = 0
-
-    if strategy == "merge":
-        stage = f"{table}__stage"
-        staged = (
-            inserts.select("pk_id", F.lit("insert").alias("op"), "resource")
+    try:
+        # Insert pks (the reference lets SERIAL do this): allocated
+        # above the max RAW mirror pk, as unparseable rows hold ids
+        # too. Bucket-parallel, so no single task numbers a whole
+        # initial load: row_number inside _PK_BUCKETS res_key hash
+        # buckets plus per-bucket offsets from the bucket counts. Ids
+        # are dense in (bucket, res_key) order, stable across retries.
+        bucket = F.pmod(F.xxhash64("res_key"), F.lit(_PK_BUCKETS)).cast("int")
+        summary = (
+            tagged.select("op", F.when(F.col("op") == OP_INSERT, bucket).alias("bucket"))
             .unionByName(
-                updates.select("pk_id", F.lit("update").alias("op"), "resource")
+                mirror_df.select(_mirror_pk(mirror_df).alias("pk")),
+                allowMissingColumns=True,
             )
-            .unionByName(
-                deletes.select(
-                    "pk_id",
-                    F.lit("delete").alias("op"),
-                    F.lit(None).cast("string").alias("resource"),
-                )
+            .groupBy("op", "bucket")
+            .agg(F.count(F.lit(1)), F.max("pk"))
+            .collect()
+        )
+        ops = dict.fromkeys((OP_INSERT, OP_UPDATE, OP_DELETE, OP_NOOP), 0)
+        max_pk, buckets = 0, {}
+        for op, b, n, pk in summary:
+            if op is None:  # the raw mirror rows
+                max_pk = pk or 0
+            else:
+                ops[op] += n
+                if op == OP_INSERT:
+                    buckets[b] = n
+        offsets, acc = [], max_pk
+        for b in sorted(buckets):
+            offsets.append(F.when(F.col("__bucket") == b, F.lit(acc)))
+            acc += buckets[b]
+        offset_col = F.coalesce(*offsets, F.lit(0))
+        applied = [OP_INSERT, OP_UPDATE] + ([OP_DELETE] if apply_deletes else [])
+        w_bucket = Window.partitionBy("op", "__bucket").orderBy("res_key")
+        changes = (
+            tagged.where(F.col("op").isin(applied))
+            .withColumn("__bucket", bucket)
+            .select(
+                "op",
+                F.when(
+                    F.col("op") == OP_INSERT,
+                    F.row_number().over(w_bucket) + offset_col,
+                ).otherwise(F.col("pk_id")).cast("int").alias("pk_id"),
+                "resource",
             )
         )
-        conn = connect_fn()
-        try:
-            cur = conn.cursor()
-            cur.execute(f"DROP TABLE IF EXISTS {stage}")  # noqa: S608
-            cur.execute(
-                f"CREATE TABLE {stage} (pk_id INT, op TEXT, resource TEXT)"  # noqa: S608
-            )
-            conn.commit()
-        finally:
-            conn.close()
-        ph = "%s, %s, %s" if dialect == "pg" else "?, ?, ?"
-        jdbc_upsert.foreach_partition_write(
-            staged,
-            f"INSERT INTO {stage} (pk_id, op, resource) VALUES ({ph})",  # noqa: S608
-            connect_fn,
-            batch_size,
-        )
-        jdbc_upsert.merge_stage_into_target(
-            connect_fn, table, stage, dialect=dialect
-        )
-        conn = connect_fn()
-        try:
-            conn.cursor().execute(f"DROP TABLE IF EXISTS {stage}")  # noqa: S608
-            conn.commit()
-        finally:
-            conn.close()
-    else:
-        jdbc_upsert.apply_changeset(
-            inserts, updates, deletes, table, connect_fn, batch_size,
-            dialect=dialect,
-        )
+        apply = jdbc_upsert.merge_changeset if strategy == "merge" else jdbc_upsert.apply_changeset
+        apply(changes, table, connect_fn, batch_size, dialect=dialect)
+    finally:
+        tagged.unpersist()
 
     conn = connect_fn()
     try:
@@ -252,15 +210,19 @@ def sync_resources(
         mirror_after = int(cur.fetchone()[0])
     finally:
         conn.close()
-    src_count = well_formed.count()
-    tagged.unpersist()
+    if ops[OP_INSERT] + ops[OP_UPDATE] + ops[OP_NOOP]:
+        counts = seen.get
+    else:
+        # No source row was well-formed: AQE drops the empty observed
+        # stage from the final plan and the Observation gets no row.
+        counts = {"source_count": 0, "malformed": source_resources.count()}
     return SyncStats(
-        inserts=stats_rows.get(OP_INSERT, 0),
-        updates=stats_rows.get(OP_UPDATE, 0),
-        deletes=stats_rows.get(OP_DELETE, 0),
-        noops=stats_rows.get(OP_NOOP, 0),
-        malformed=n_malformed,
-        source_count=src_count,
+        inserts=ops[OP_INSERT],
+        updates=ops[OP_UPDATE],
+        deletes=ops[OP_DELETE] if apply_deletes else 0,
+        noops=ops[OP_NOOP],
+        malformed=counts["malformed"],
+        source_count=counts["source_count"],
         mirror_count_after=mirror_after,
     )
 

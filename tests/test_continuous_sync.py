@@ -204,3 +204,46 @@ def _run_kill_restart(spark, tmp_path, sqlite_db, os):
     # idempotence of a further restart: nothing left to process
     run_stream()
     assert _mirror_versions(sqlite_db) == full
+
+
+def test_stream_batch_with_malformed_row_reports_stats(spark, tmp_path, sqlite_db, monkeypatch):
+    """An upsert-only micro-batch carrying one malformed row: the batch
+    completes, the malformed row is counted and skipped, and the
+    mirror-only row is neither deleted nor reported as a delete."""
+    from fhir2sql_spark.sinks import jdbc_upsert
+    from fhir2sql_spark.sync import pipeline
+    from fhir2sql_spark.sync.pipeline import SyncStats
+
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    sync_resources(
+        spark,
+        spark.createDataFrame([(_resource("p0", 1),), (_resource("p1", 1),)], "resource string"),
+        sqlite_db,
+        "patient",
+    )
+    seen = []
+    real = pipeline.sync_resources
+
+    def recording(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(pipeline, "sync_resources", recording)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "b1.jsonl").write_text(
+        "\n".join([_resource("p0", 2), _resource("p2", 1), "not json"]) + "\n"
+    )
+    stream = (
+        spark.readStream.format("text").load(str(in_dir)).withColumnRenamed("value", "resource")
+    )
+    q = stream_sync(stream, sqlite_db, "patient", str(tmp_path / "ckpt"))
+    try:
+        assert q.awaitTermination(180), "micro-batch did not finish"
+    finally:
+        q.stop()
+    assert seen == [SyncStats(
+        inserts=1, updates=1, deletes=0, noops=0, malformed=1,
+        source_count=2, mirror_count_after=3,
+    )]
+    assert _mirror_versions(sqlite_db) == {"p0": 2, "p1": 1, "p2": 1}

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import sqlite3
+import threading
 
 import pytest
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.sinks import jdbc_upsert
 from fhir2sql_spark.sources.rest_pages import read_bundles, register_bundle_file_source
-from fhir2sql_spark.sync.pipeline import run_sync, sync_resources
+from fhir2sql_spark.sync.pipeline import SyncStats, run_sync, sync_resources
 
 
 def _resource(rid: str, version: int, rtype: str = "Patient", **extra) -> dict:
@@ -542,3 +543,149 @@ def test_merge_failure_rolls_back_and_replay_converges(spark, sqlite_db):
     )
     conn.close()
     assert ids == sorted(r["id"] for r in res2)
+
+
+def _json_frame(spark, resources):
+    return spark.createDataFrame(
+        [(json.dumps(r, sort_keys=True),) for r in resources], "resource string"
+    )
+
+
+def _returns_within(seconds, fn, *args, **kwargs):
+    """Call ``fn`` on a daemon thread and fail, instead of hanging the
+    suite, if it has not returned after ``seconds``: the sync's
+    ``Observation.get`` blocks until the observed plan has run."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn(*args, **kwargs)
+        except BaseException as e:  # re-raised on the test thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"{fn.__name__} did not return within {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+@pytest.mark.parametrize("via_mirror_df", [False, True])
+def test_insert_pks_skip_unparseable_mirror_rows(spark, sqlite_db, via_mirror_df):
+    """The mirror's highest id holds a row with no versionId: it is
+    skipped by the diff, but its id is taken, so new pks must start
+    above it (not above the highest PARSEABLE row, which collided on
+    the primary key)."""
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    mirror = [(1, json.dumps(_resource("a", 1), sort_keys=True)), (2, '{"id": "bad"}')]
+    conn = sqlite_db()
+    conn.executemany("INSERT INTO patient (id, resource) VALUES (?, ?)", mirror)
+    conn.commit()
+    conn.close()
+    mirror_df = (
+        spark.createDataFrame(mirror, "id int, resource string") if via_mirror_df else None
+    )
+    src = _json_frame(spark, [_resource("a", 1), _resource("b", 1)])
+    stats = sync_resources(spark, src, sqlite_db, "patient", mirror_df=mirror_df)
+    assert stats == SyncStats(
+        inserts=1, updates=0, deletes=0, noops=1, malformed=0,
+        source_count=2, mirror_count_after=3,
+    )
+    conn = sqlite_db()
+    rows = dict(conn.execute("SELECT id, json_extract(resource, '$.id') FROM patient"))
+    conn.close()
+    assert rows == {1: "a", 2: "bad", 3: "b"}
+
+
+def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
+    """One sync_resources call reads its source once and runs two
+    DataFrame actions: the summary collect and the apply job."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    first = [_resource(f"pat-{i:03d}", 1) for i in range(10)] + [_resource("gone", 1)]
+    sync_resources(spark, _json_frame(spark, first), sqlite_db, "patient")
+
+    docs = [
+        json.dumps(_resource(f"pat-{i:03d}", 2 if i < 5 else 1), sort_keys=True)
+        for i in range(20)
+    ]
+    scanned = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def doc(i):
+        scanned.add(1)
+        return docs[i]
+
+    src = spark.range(len(docs)).select(doc(F.col("id").cast("int")).alias("resource"))
+
+    actions, depth = [], [0]
+
+    def counting(name, original):
+        def wrapper(*args, **kwargs):
+            if depth[0] == 0:
+                actions.append(name)
+            depth[0] += 1
+            try:
+                return original(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return wrapper
+
+    for name in ("collect", "count", "foreach", "foreachPartition", "toPandas",
+                 "isEmpty", "take", "head", "first", "tail", "toLocalIterator", "show"):
+        monkeypatch.setattr(DataFrame, name, counting(name, getattr(DataFrame, name)))
+
+    stats = sync_resources(spark, src, sqlite_db, "patient")
+    monkeypatch.undo()
+    assert stats == SyncStats(
+        inserts=10, updates=5, deletes=1, noops=5, malformed=0,
+        source_count=20, mirror_count_after=20,
+    )
+    assert scanned.value == len(docs)
+    assert actions == ["collect", "foreachPartition"]
+
+
+def test_empty_source_deletes_whole_mirror(spark, sqlite_db):
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    src = _json_frame(spark, [_resource(f"pat-{i}", 1) for i in range(5)])
+    sync_resources(spark, src, sqlite_db, "patient")
+    empty = spark.createDataFrame([], "resource string")
+    stats = _returns_within(180, sync_resources, spark, empty, sqlite_db, "patient")
+    assert stats == SyncStats(
+        inserts=0, updates=0, deletes=5, noops=0, malformed=0,
+        source_count=0, mirror_count_after=0,
+    )
+
+
+def test_all_malformed_source(spark, sqlite_db):
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    bad = [{"resourceType": "Patient"}, {"id": "x", "meta": {}}, {"id": "y"}]
+    stats = _returns_within(
+        180, sync_resources, spark, _json_frame(spark, bad), sqlite_db, "patient"
+    )
+    assert stats == SyncStats(
+        inserts=0, updates=0, deletes=0, noops=0, malformed=3,
+        source_count=0, mirror_count_after=0,
+    )
+
+
+@pytest.mark.parametrize("via_mirror_df", [False, True])
+def test_empty_mirror(spark, sqlite_db, via_mirror_df):
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    src = _json_frame(
+        spark, [_resource(f"pat-{i}", 1) for i in range(4)] + [{"id": "no-meta"}]
+    )
+    mirror_df = (
+        spark.createDataFrame([], "id int, resource string") if via_mirror_df else None
+    )
+    stats = _returns_within(
+        180, sync_resources, spark, src, sqlite_db, "patient", mirror_df=mirror_df
+    )
+    assert stats == SyncStats(
+        inserts=4, updates=0, deletes=0, noops=0, malformed=1,
+        source_count=4, mirror_count_after=4,
+    )
