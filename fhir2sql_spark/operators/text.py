@@ -1040,7 +1040,10 @@ def viterbi_best_bits(
                 "viterbi_best_bits: piece length outside piece_lens "
                 f"{tuple(plens)}: {p!r}"
             )
-        wgt[p] = int(r["wgt"])
+        # a duplicated piece keeps its MAX weight, whatever the
+        # collect order (the old groupBy(piece).max semantics)
+        g = int(r["wgt"])
+        wgt[p] = max(g, wgt.get(p, g))
 
     def vit(it):
         for pdf in it:

@@ -7,7 +7,9 @@ until absent (/root/reference/src/main.rs:150-157, 199-270), with
 Spark-first re-expression, two tiers:
 
 1. ``iter_bundle_entries`` + ``read_bundles``: a driver-side page
-   walker feeding ``spark.createDataFrame`` per page batch. The
+   walker whose page batches become Arrow record batches of one
+   DataFrame (``sources/arrow_rows.py``: no Python worker reads it).
+   It is the CLI's fallback source and the one most sync tests use. The
    transport is a callable ``fetch(url) -> dict`` so tests inject
    fixture bundles and production injects requests.get(...).json();
    retry/backoff mirrors the reference's bounded retry
@@ -26,12 +28,15 @@ ends the scan (src/main.rs:201-207).
 
 from __future__ import annotations
 
+import itertools
 import json
 import time
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+
+from fhir2sql_spark.sources.arrow_rows import arrow_frame
 
 BUNDLE_SCHEMA = StructType(
     [
@@ -96,23 +101,15 @@ def read_bundles(
 ) -> DataFrame:
     """Materialize the page walk as a DataFrame of raw resource JSON.
 
-    The driver only buffers ``page_batch`` rows at a time before
-    handing them to the JVM; downstream processing (version extraction,
-    diff, sink) is fully distributed. For true source parallelism use
-    BundleFileDataSource / per-offset page URLs."""
-    rows: list[tuple[str]] = []
-    dfs: list[DataFrame] = []
-    for res in iter_bundle_entries(first_url, fetch, max_pages=max_pages):
-        rows.append((res,))
-        if len(rows) >= page_batch:
-            dfs.append(spark.createDataFrame(rows, BUNDLE_SCHEMA))
-            rows = []
-    if rows or not dfs:
-        dfs.append(spark.createDataFrame(rows, BUNDLE_SCHEMA))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    Every ``page_batch`` resources become one Arrow record batch, so the
+    driver holds the walk as compact Arrow data, not Python rows, and
+    the JVM reads the frame with no Python worker task.
+    Downstream processing (version extraction, diff, sink) is fully
+    distributed. For true source parallelism use BundleFileDataSource /
+    per-offset page URLs."""
+    entries = iter_bundle_entries(first_url, fetch, max_pages=max_pages)
+    batches = iter(lambda: list(itertools.islice(entries, page_batch)), [])
+    return arrow_frame(spark, BUNDLE_SCHEMA, ([batch] for batch in batches))
 
 
 def search_url(

@@ -24,13 +24,19 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from fhir2sql_spark.sinks import jdbc_upsert
+from fhir2sql_spark.sources.arrow_rows import arrow_frame
 from fhir2sql_spark.sync.diff import OP_DELETE, OP_INSERT, OP_NOOP, OP_UPDATE, diff_snapshots
 from fhir2sql_spark.sync.fhir import extract_versions, is_well_formed, partition_malformed
 
 # Parallelism of insert-pk allocation (buckets = concurrent tasks).
 _PK_BUCKETS = 64
+
+MIRROR_SCHEMA = StructType(
+    [StructField("pk_id", IntegerType()), StructField("resource", StringType())]
+)
 
 
 @dataclass
@@ -76,24 +82,28 @@ def extract_mirror_versions(mirror_raw: DataFrame) -> DataFrame:
 def read_mirror_versions(
     spark: SparkSession, connect_fn: Callable[[], object], table: str
 ) -> DataFrame:
-    """TEST-ONLY raw mirror snapshot ``(pk_id, resource)``: fetches
-    the whole table through one driver-side connection (the in-process
-    sqlite/duckdb databases are not visible to executors). This
-    inherits the reference's BTreeMap scale ceiling by construction —
-    production syncs must pass ``mirror_df`` to ``sync_resources``
-    (built from ``sources.jdbc.mirror_reader``'s range-partitioned
-    read, or any distributed source) so the mirror never materializes
-    on the driver."""
+    """Raw mirror snapshot ``(pk_id, resource)``: the default mirror
+    read of ``sync_resources`` when no ``mirror_df`` is given, and so
+    of ``run_sync``, ``stream_sync`` and the CLI. It fetches the whole
+    table through one driver-side connection (the in-process
+    sqlite/duckdb databases are not visible to executors) and hands the
+    rows to the JVM as Arrow batches, so reading the frame runs no
+    Python worker task. The fetch inherits the reference's BTreeMap
+    scale ceiling (src/main.rs:49-75): the mirror must fit in driver
+    memory. Past that, pass ``mirror_df`` (a range-partitioned
+    ``sources.jdbc`` read, or any distributed source) so the mirror
+    never materializes on the driver."""
     conn = connect_fn()
     try:
         cur = conn.cursor()
         cur.execute(f"SELECT id, resource FROM {table}")  # noqa: S608
-        rows = cur.fetchall()
+        rows = cur.fetchall() or []
     finally:
         conn.close()
     # normalize across drivers (the psql adapter fetches text)
-    rows = [(int(r[0]), str(r[1])) for r in rows or []]
-    return spark.createDataFrame(rows, "pk_id int, resource string")
+    ids = [int(r[0]) for r in rows]
+    docs = [str(r[1]) for r in rows]
+    return arrow_frame(spark, MIRROR_SCHEMA, [(ids, docs)])
 
 
 def sync_resources(
@@ -113,7 +123,8 @@ def sync_resources(
     well-formed and malformed resources; ONE summary ``collect`` over
     ``tagged`` (unioned with the raw mirror pks) yields the op counts,
     the insert-bucket counts and the max pk; ONE ``foreachPartition``
-    job applies the ``(op, pk_id, resource)`` change-set.
+    job applies the ``(op, pk_id, resource)`` change-set, and none runs
+    when the summary shows nothing to apply.
 
     ``strategy``: 'batched' = per-partition parameterized executemany
     (parallel, independent transactions — the reference's flush model
@@ -129,7 +140,7 @@ def sync_resources(
     ``sources.jdbc.mirror_reader(spark, cfg, lo, hi).load()``, a
     range-partitioned parallel JDBC scan — so no step of the sync
     materializes the mirror on the driver (the reference's BTreeMap
-    ceiling, src/main.rs:49-75). When omitted, the test-only
+    ceiling, src/main.rs:49-75). When omitted, the
     ``read_mirror_versions`` driver fetch is used.
 
     ``apply_deletes=False`` is the INCREMENTAL form for one micro-batch
@@ -199,7 +210,10 @@ def sync_resources(
             )
         )
         apply = jdbc_upsert.merge_changeset if strategy == "merge" else jdbc_upsert.apply_changeset
-        apply(changes, table, connect_fn, batch_size, dialect=dialect)
+        # Nothing to apply (a converged re-sync, an all-noop micro-batch):
+        # no apply job, no connection, no stage table.
+        if any(ops[op] for op in applied):
+            apply(changes, table, connect_fn, batch_size, dialect=dialect)
     finally:
         tagged.unpersist()
 

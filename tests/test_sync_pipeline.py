@@ -599,27 +599,10 @@ def test_insert_pks_skip_unparseable_mirror_rows(spark, sqlite_db, via_mirror_df
     assert rows == {1: "a", 2: "bad", 3: "b"}
 
 
-def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
-    """One sync_resources call reads its source once and runs two
-    DataFrame actions: the summary collect and the apply job."""
+def _count_actions(monkeypatch) -> list[str]:
+    """Record the name of every outermost DataFrame action from here
+    on (until ``monkeypatch.undo()``)."""
     from pyspark.sql.classic.dataframe import DataFrame
-
-    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
-    first = [_resource(f"pat-{i:03d}", 1) for i in range(10)] + [_resource("gone", 1)]
-    sync_resources(spark, _json_frame(spark, first), sqlite_db, "patient")
-
-    docs = [
-        json.dumps(_resource(f"pat-{i:03d}", 2 if i < 5 else 1), sort_keys=True)
-        for i in range(20)
-    ]
-    scanned = spark.sparkContext.accumulator(0)
-
-    @F.udf("string")
-    def doc(i):
-        scanned.add(1)
-        return docs[i]
-
-    src = spark.range(len(docs)).select(doc(F.col("id").cast("int")).alias("resource"))
 
     actions, depth = [], [0]
 
@@ -638,7 +621,30 @@ def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
     for name in ("collect", "count", "foreach", "foreachPartition", "toPandas",
                  "isEmpty", "take", "head", "first", "tail", "toLocalIterator", "show"):
         monkeypatch.setattr(DataFrame, name, counting(name, getattr(DataFrame, name)))
+    return actions
 
+
+def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
+    """One sync_resources call reads its source once and runs two
+    DataFrame actions: the summary collect and the apply job."""
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    first = [_resource(f"pat-{i:03d}", 1) for i in range(10)] + [_resource("gone", 1)]
+    sync_resources(spark, _json_frame(spark, first), sqlite_db, "patient")
+
+    docs = [
+        json.dumps(_resource(f"pat-{i:03d}", 2 if i < 5 else 1), sort_keys=True)
+        for i in range(20)
+    ]
+    scanned = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def doc(i):
+        scanned.add(1)
+        return docs[i]
+
+    src = spark.range(len(docs)).select(doc(F.col("id").cast("int")).alias("resource"))
+
+    actions = _count_actions(monkeypatch)
     stats = sync_resources(spark, src, sqlite_db, "patient")
     monkeypatch.undo()
     assert stats == SyncStats(
@@ -689,3 +695,66 @@ def test_empty_mirror(spark, sqlite_db, via_mirror_df):
         inserts=4, updates=0, deletes=0, noops=0, malformed=1,
         source_count=4, mirror_count_after=4,
     )
+
+
+@pytest.mark.parametrize("strategy", ["batched", "merge"])
+def test_converged_resync_runs_only_the_summary_collect(
+    spark, sqlite_db, monkeypatch, strategy
+):
+    """A re-sync with nothing to apply stops after the summary collect:
+    no apply job (for merge, no staging job)."""
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    src = _json_frame(spark, [_resource(f"pat-{i}", 1) for i in range(6)] + [{"id": "x"}])
+    sync_resources(spark, src, sqlite_db, "patient", strategy=strategy)
+    actions = _count_actions(monkeypatch)
+    stats = sync_resources(spark, src, sqlite_db, "patient", strategy=strategy)
+    monkeypatch.undo()
+    assert stats == SyncStats(
+        inserts=0, updates=0, deletes=0, noops=6, malformed=1,
+        source_count=6, mirror_count_after=6,
+    )
+    assert actions == ["collect"]
+
+
+@pytest.mark.parametrize("local_relation", [True, False])
+def test_driver_fetched_frames_run_no_python_worker(spark, sqlite_db, local_relation):
+    """The default mirror read and the REST page walk reach the JVM as
+    Arrow batches: no PythonRDD in their lineage, schemas unchanged.
+    Small tables become a local relation; with the threshold at 1 byte
+    they become an RDD of Arrow batches."""
+    from fhir2sql_spark.sync.pipeline import read_mirror_versions
+
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient", "empty"])
+    conn = sqlite_db()
+    conn.executemany(
+        "INSERT INTO patient (id, resource) VALUES (?, ?)",
+        [(i, json.dumps(_resource(f"pat-{i}", 1))) for i in range(1, 6)],
+    )
+    conn.commit()
+    conn.close()
+    pages = _bundle_fixture(n=120, page_size=50)
+    no_entries = {"resourceType": "Bundle", "type": "searchset", "entry": []}
+    conf = "spark.sql.execution.arrow.localRelationThreshold"
+    threshold = spark.conf.get(conf)
+    spark.conf.set(conf, threshold if local_relation else "1")
+    try:
+        mirror = read_mirror_versions(spark, sqlite_db, "patient")
+        empty_mirror = read_mirror_versions(spark, sqlite_db, "empty")
+        walk = read_bundles(
+            spark, "http://blaze/fhir/Patient?page=0", fetch=lambda u: pages[u],
+            page_batch=40,
+        )
+        empty_walk = read_bundles(spark, "http://blaze/first", fetch=lambda u: no_entries)
+    finally:
+        spark.conf.set(conf, threshold)
+
+    for df in (mirror, empty_mirror):
+        assert df.schema.simpleString() == "struct<pk_id:int,resource:string>"
+    for df in (walk, empty_walk):
+        assert df.schema.simpleString() == "struct<resource:string>"
+    for df in (mirror, empty_mirror, walk, empty_walk):
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+    assert sorted(r.pk_id for r in mirror.collect()) == [1, 2, 3, 4, 5]
+    assert walk.count() == 120
+    assert empty_mirror.count() == empty_walk.count() == 0

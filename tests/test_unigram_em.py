@@ -162,6 +162,18 @@ def test_viterbi_known(spark):
     assert _viterbi_py("abcab", {"ab": 3, "bca": 5, "cab": 4}) == 7
 
 
+def test_viterbi_duplicate_piece_scores_its_max_weight(spark):
+    """A piece listed twice scores its higher weight, even when the
+    lower one is collected last."""
+    from fhir2sql_spark.operators.text import viterbi_best_bits
+
+    scored = spark.createDataFrame(
+        [("ab", 5), ("ab", 1)], "piece string, wgt long"
+    ).coalesce(1)
+    got = viterbi_best_bits(_words_df(spark, ["abab"]), scored).collect()
+    assert [(r["w"], r["vbits"]) for r in got] == [("abab", 10)]
+
+
 def test_viterbi_property_random(spark):
     """Operator == Python DP over random words and weighted vocabs
     (one batched run; integer weights)."""

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 import time
 from pathlib import Path
@@ -26,6 +27,24 @@ sys.path.insert(0, str(REPO))
 
 from fhir2sql_spark import registry  # noqa: E402
 from fhir2sql_spark.session import get_spark  # noqa: E402
+
+
+def python_rdds(df) -> int:
+    """``PythonRDD`` nodes under the RDD scans (``LogicalRDD``) of the
+    analyzed plan and its subqueries. Walks the plan only, so it runs
+    no job, and it sees broadcast sides that the final RDD's lineage
+    leaves out."""
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
+
+    n, todo = 0, [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "LogicalRDD":
+            lineage = node.rdd().toDebugString()
+            n += len(set(re.findall(r"\bPythonRDD\[(\d+)\]", lineage)))
+        todo += seq(node.children()) + seq(node.subqueries())
+    return n
 
 
 def main() -> None:
@@ -45,9 +64,8 @@ def main() -> None:
         sc.setJobGroup(name, name)
         t0 = time.time()
         try:
-            registry.QUERIES[name](spark, args.sf).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            df = registry.QUERIES[name](spark, args.sf)
+            df.write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001 — audit must finish
             out[name] = {"error": str(exc)[:200]}
             continue
@@ -70,6 +88,7 @@ def main() -> None:
             "jobs": len(jobs),
             "stages": n_stages,
             "tasks": n_tasks,
+            "python_rdds": python_rdds(df),
             "sec": round(dt, 2),
         }
         sc.setJobGroup(None, None)
