@@ -11,7 +11,7 @@ Layout:
   registry  — query registry powering __spark_entry__.py
   queries/  — one module per operator category (each registers queries)
   operators/— custom operators (as-of join, dedup, similarity, text)
-  sources/  — paginated REST bundle source, JDBC partitioned reads
+  sources/  — paginated REST bundle source, bundle-file DataSource
   sinks/    — JDBC upsert/delete sink (the reference's write path)
   sync/     — the version-diff CDC engine + full sync pipeline
   streaming/— Structured Streaming harness (file source, watermarks)

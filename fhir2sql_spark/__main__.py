@@ -61,19 +61,8 @@ def _sync_once(spark, bundle_dir: str, db: str, table: str, batch_size: int) -> 
         return sqlite3.connect(db, timeout=60, check_same_thread=False)
 
     create_mirror_tables(connect, [table])
-    if register_bundle_file_source(spark):
-        src = spark.read.format("fhir_bundles").option("path", bundle_dir).load()
-    else:  # pragma: no cover - Spark < 4 fallback
-        import glob
-
-        def fetch(url: str) -> dict:
-            with open(url) as fh:
-                return json.load(fh)
-
-        from fhir2sql_spark.sources.rest_pages import read_bundles
-
-        files = sorted(glob.glob(os.path.join(bundle_dir, "*.json")))
-        src = read_bundles(spark, files[0], fetch, max_pages=len(files))
+    register_bundle_file_source(spark)
+    src = spark.read.format("fhir_bundles").option("path", bundle_dir).load()
     stats = sync_resources(spark, src, connect, table, batch_size)
     return {
         "table": table,

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, else half of physical memory
+    capped at 24g: the heap must leave room for the Python workers and
+    the OS on a host smaller than 48 GB."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(app_name: str = "fhir2sql-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -61,7 +72,7 @@ def get_spark(app_name: str = "fhir2sql-spark") -> SparkSession:
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
         # Deterministic timestamp semantics vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Cached/persisted plans keep their pre-AQE output partitioning
         # by default, so a persist materializes at

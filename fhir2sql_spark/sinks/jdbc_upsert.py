@@ -224,9 +224,9 @@ def apply_changeset(
 
     ``dialect="pg"`` swaps in the PostgreSQL statements
     (sinks/pg_dialect.py — %s paramstyle, ::jsonb casts; same
-    positional tuple contract, golden-pinned + grammar-validated in
-    tests/test_pg_dialect.py). ``connect_fn`` is then expected to be a
-    psycopg-style factory."""
+    positional tuple contract, golden-pinned in tests/test_pg_dialect.py
+    and executed on a real server in tests/test_pg_roundtrip.py).
+    ``connect_fn`` is then expected to be a psycopg-style factory."""
     if dialect not in _CHANGE_SQL:
         raise ValueError(f"unknown sink dialect {dialect!r}")
     ins, upd, dele = (s.format(table=table) for s in _CHANGE_SQL[dialect])

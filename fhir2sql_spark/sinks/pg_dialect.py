@@ -19,12 +19,10 @@ in exactly the ways no ANSI engine can falsify:
   (src/db_utils.rs:112-134) as the PG-native alternative to the
   sink-maintained ``last_updated_at``.
 
-Every statement below is pinned verbatim by golden tests
-(tests/test_pg_dialect.py) and validated against a vendored
-PostgreSQL-subset grammar (pg_lint.py) — the closest falsifier
-available in a container with no PG server and no sqlglot. A future
-real-PG integration test only needs connect_fn = psycopg2.connect and
-``dialect="pg"``.
+Every statement below is pinned by golden tests
+(tests/test_pg_dialect.py) and executed against a real PostgreSQL
+server by tests/test_pg_roundtrip.py (``dialect="pg"`` with the
+psql-backed ``sinks/psql_dbapi.py`` connection).
 """
 
 from __future__ import annotations
@@ -89,9 +87,9 @@ WHERE id IN (SELECT s.pk_id FROM {stage} s WHERE s.op = 'delete')"""
 
 def pg_statements(table: str, stage: str | None = None) -> dict[str, str]:
     """Every statement the PG sink can emit, formatted for ``table``
-    (and ``stage`` when given). The golden tests iterate this dict, so
-    adding a statement automatically extends both the pin and the
-    grammar check."""
+    (and ``stage`` when given), keyed by name. tests/test_pg_dialect.py
+    pins them; tests/test_pg_roundtrip.py runs each key on a real
+    server, so a new key needs a new round-trip test."""
     out = {
         "ddl": PG_MIRROR_DDL.format(table=table),
         "touch_fn": PG_TOUCH_FUNCTION_DDL,

@@ -9,11 +9,10 @@ Spark-first re-expression, two tiers:
 1. ``iter_bundle_entries`` + ``read_bundles``: a driver-side page
    walker whose page batches become Arrow record batches of one
    DataFrame (``sources/arrow_rows.py``: no Python worker reads it).
-   It is the CLI's fallback source and the one most sync tests use. The
-   transport is a callable ``fetch(url) -> dict`` so tests inject
-   fixture bundles and production injects requests.get(...).json();
-   retry/backoff mirrors the reference's bounded retry
-   (src/db_utils.rs:35-59).
+   Most sync tests read through it. The transport is a callable
+   ``fetch(url) -> dict`` so tests inject fixture bundles and
+   production injects requests.get(...).json(); retry/backoff mirrors
+   the reference's bounded retry (src/db_utils.rs:35-59).
 
 2. ``BundleFileDataSource``: a Spark 4 Python DataSource reading a
    directory of bundle-JSON files with one partition per file —
@@ -196,24 +195,40 @@ def check_source_health(
     return False
 
 
-def register_bundle_file_source(spark: SparkSession) -> bool:
+def register_bundle_file_source(spark: SparkSession) -> None:
     """Register the Spark 4 Python DataSource ``fhir_bundles``.
 
     Batch: one partition per bundle file. Streaming: a
     SimpleDataSourceStreamReader whose offset is the count of files
     already ingested — new page files appearing in the directory flow
     into each micro-batch, turning the reference's poll loop into an
-    incremental source. Returns False when the Python DataSource API
-    is unavailable."""
-    try:
-        from pyspark.sql.datasource import (
-            DataSource,
-            DataSourceReader,
-            InputPartition,
-            SimpleDataSourceStreamReader,
-        )
-    except ImportError:
-        return False
+    incremental source. Unlike ``iter_bundle_entries``, a file without
+    entries yields no rows and the read goes on with the next file.
+
+    The helpers and reader classes live in this function so that
+    cloudpickle ships them to executors by value: executors then never
+    import this package (nor pyarrow with it)."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+        SimpleDataSourceStreamReader,
+    )
+
+    def bundle_files(directory: str) -> list[str]:
+        import glob
+        import os
+
+        return sorted(glob.glob(os.path.join(directory, "*.json")))
+
+    def bundle_rows(path: str) -> Iterator[tuple[str]]:
+        # skip-malformed (src/main.rs:210-216), as iter_bundle_entries
+        with open(path) as fh:
+            bundle = json.load(fh)
+        for e in bundle.get("entry") or []:
+            res = e.get("resource")
+            if res is not None:
+                yield (json.dumps(res, separators=(",", ":"), sort_keys=True),)
 
     class _BundlePartition(InputPartition):
         def __init__(self, path: str) -> None:
@@ -224,63 +239,28 @@ def register_bundle_file_source(spark: SparkSession) -> bool:
             self.dir = options["path"]
 
         def partitions(self):  # noqa: D102
-            import glob
-            import os
-
-            files = sorted(glob.glob(os.path.join(self.dir, "*.json")))
-            return [_BundlePartition(f) for f in files]
+            return [_BundlePartition(f) for f in bundle_files(self.dir)]
 
         def read(self, partition):  # noqa: D102
-            with open(partition.path) as fh:
-                bundle = json.load(fh)
-            for e in bundle.get("entry") or []:
-                res = e.get("resource")
-                if res is None:
-                    continue
-                yield (json.dumps(res, separators=(",", ":"), sort_keys=True),)
+            return bundle_rows(partition.path)
 
     class _BundleStreamReader(SimpleDataSourceStreamReader):
         def __init__(self, options: dict) -> None:
             self.dir = options["path"]
 
-        def _files(self) -> list[str]:
-            import glob
-            import os
-
-            return sorted(glob.glob(os.path.join(self.dir, "*.json")))
-
         def initialOffset(self) -> dict:
             return {"ingested": 0}
 
         def read(self, start: dict):
-            files = self._files()
-            done = start["ingested"]
-            rows = []
-            for f in files[done:]:
-                with open(f) as fh:
-                    bundle = json.load(fh)
-                for e in bundle.get("entry") or []:
-                    res = e.get("resource")
-                    if res is None:
-                        continue
-                    rows.append(
-                        (json.dumps(res, separators=(",", ":"), sort_keys=True),)
-                    )
+            files = bundle_files(self.dir)
+            rows = [row for f in files[start["ingested"] :] for row in bundle_rows(f)]
             return iter(rows), {"ingested": len(files)}
 
         def readBetweenOffsets(self, start: dict, end: dict):
             # replay for recovery: deterministic because files are
             # immutable and ordered
-            files = self._files()[start["ingested"] : end["ingested"]]
-            for f in files:
-                with open(f) as fh:
-                    bundle = json.load(fh)
-                for e in bundle.get("entry") or []:
-                    res = e.get("resource")
-                    if res is not None:
-                        yield (
-                            json.dumps(res, separators=(",", ":"), sort_keys=True),
-                        )
+            for f in bundle_files(self.dir)[start["ingested"] : end["ingested"]]:
+                yield from bundle_rows(f)
 
     class BundleFileDataSource(DataSource):
         @classmethod
@@ -297,4 +277,3 @@ def register_bundle_file_source(spark: SparkSession) -> bool:
             return _BundleStreamReader(self.options)
 
     spark.dataSource.register(BundleFileDataSource)
-    return True

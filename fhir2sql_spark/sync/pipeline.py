@@ -91,7 +91,7 @@ def read_mirror_versions(
     Python worker task. The fetch inherits the reference's BTreeMap
     scale ceiling (src/main.rs:49-75): the mirror must fit in driver
     memory. Past that, pass ``mirror_df`` (a range-partitioned
-    ``sources.jdbc`` read, or any distributed source) so the mirror
+    ``spark.read.jdbc`` scan, or any distributed source) so the mirror
     never materializes on the driver."""
     conn = connect_fn()
     try:
@@ -136,9 +136,10 @@ def sync_resources(
     wire-verified against a real server in tests/test_pg_roundtrip.py.
 
     ``mirror_df`` is the PRODUCTION mirror-read seam: a distributed
-    (pk_id|id, resource) DataFrame — typically
-    ``sources.jdbc.mirror_reader(spark, cfg, lo, hi).load()``, a
-    range-partitioned parallel JDBC scan — so no step of the sync
+    (pk_id|id, resource) DataFrame — typically the range-partitioned
+    parallel JDBC scan ``spark.read.jdbc(url, table, column="id",
+    lowerBound=lo, upperBound=hi, numPartitions=n,
+    properties={"user": ..., "password": ...})`` — so no step of the sync
     materializes the mirror on the driver (the reference's BTreeMap
     ceiling, src/main.rs:49-75). When omitted, the
     ``read_mirror_versions`` driver fetch is used.

@@ -4,6 +4,8 @@ retry semantics."""
 from __future__ import annotations
 
 import json
+from collections import Counter
+from types import SimpleNamespace
 
 import pytest
 
@@ -47,8 +49,7 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_streaming_bundle_source_incremental(spark, tmp_path):
-    if not register_bundle_file_source(spark):
-        pytest.skip("Python DataSource API unavailable")
+    register_bundle_file_source(spark)
 
     def page(n, ids):
         return {
@@ -88,6 +89,60 @@ def test_streaming_bundle_source_incremental(spark, tmp_path):
     drain()
     rows = spark.read.parquet(out).count()
     assert rows == 25
+
+
+def test_bundle_file_reads_agree_on_gappy_pages(spark, tmp_path):
+    """Batch read, availableNow streaming read and replay
+    (readBetweenOffsets) of one directory hold the same rows: an entry
+    without a resource is skipped, and a middle file without entries
+    yields nothing while the files after it are still read."""
+    pages = [
+        {"entry": [
+            {"resource": {"resourceType": "Patient", "id": "p-1", "b": 2, "a": 1}},
+            {"fullUrl": "urn:uuid:no-resource"},
+            {"resource": {"resourceType": "Patient", "id": "p-1", "b": 2, "a": 1}},
+        ]},
+        {"type": "searchset", "link": []},
+        {"entry": [{"resource": {"resourceType": "Patient", "id": "p-2"}}]},
+    ]
+    for i, page in enumerate(pages):
+        (tmp_path / f"page_{i}.json").write_text(json.dumps(page))
+    expected = Counter(
+        [
+            '{"a":1,"b":2,"id":"p-1","resourceType":"Patient"}',
+            '{"a":1,"b":2,"id":"p-1","resourceType":"Patient"}',
+            '{"id":"p-2","resourceType":"Patient"}',
+        ]
+    )
+
+    register_bundle_file_source(spark)
+    batch = spark.read.format("fhir_bundles").option("path", str(tmp_path)).load()
+    assert Counter(r.resource for r in batch.collect()) == expected
+
+    q = (
+        spark.readStream.format("fhir_bundles")
+        .option("path", str(tmp_path))
+        .load()
+        .writeStream.format("memory")
+        .queryName("gappy_bundle_pages")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        streamed = spark.table("gappy_bundle_pages").collect()
+    finally:
+        q.stop()
+    assert Counter(r.resource for r in streamed) == expected
+
+    registered = []
+    register_bundle_file_source(
+        SimpleNamespace(dataSource=SimpleNamespace(register=registered.append))
+    )
+    stream_reader = registered[0]({"path": str(tmp_path)}).simpleStreamReader(None)
+    replayed = stream_reader.readBetweenOffsets({"ingested": 0}, {"ingested": 3})
+    assert Counter(row for (row,) in replayed) == expected
 
 
 def test_health_check_retries_bounded():

@@ -194,8 +194,7 @@ def test_bundle_file_datasource(spark, tmp_path):
     pages = _bundle_fixture(n=60, page_size=20)
     for i, (_, bundle) in enumerate(sorted(pages.items())):
         (tmp_path / f"page_{i:04d}.json").write_text(json.dumps(bundle))
-    if not register_bundle_file_source(spark):
-        pytest.skip("Python DataSource API unavailable")
+    register_bundle_file_source(spark)
     df = spark.read.format("fhir_bundles").option("path", str(tmp_path)).load()
     assert df.count() == 60
     # one partition per page file — the parallel-scan contract
@@ -321,7 +320,7 @@ def _dump_mirror_parquet(spark, connect_fn, table, path) -> None:
 
 def test_partitioned_mirror_df_seam_applies_cdc(spark, sqlite_db, tmp_path):
     """VERDICT r2 #1: the production path — mirror supplied as a
-    distributed DataFrame (jdbc.mirror_reader-shaped) — must run the
+    distributed DataFrame (spark.read.jdbc-shaped) — must run the
     identical CDC as the driver-fetch fallback."""
     pages = _bundle_fixture(n=100, page_size=40)
     src1 = read_bundles(
@@ -758,3 +757,28 @@ def test_driver_fetched_frames_run_no_python_worker(spark, sqlite_db, local_rela
     assert sorted(r.pk_id for r in mirror.collect()) == [1, 2, 3, 4, 5]
     assert walk.count() == 120
     assert empty_mirror.count() == empty_walk.count() == 0
+
+
+def test_connect_with_retry_semantics():
+    from fhir2sql_spark.sinks.jdbc_upsert import connect_with_retry
+
+    calls = {"n": 0}
+    sleeps: list[float] = []
+
+    def flaky():
+        calls["n"] += 1
+        if calls["n"] < 4:
+            raise ConnectionError("down")
+        return "conn"
+
+    assert connect_with_retry(flaky, attempts=5, sleep=sleeps.append) == "conn"
+    assert calls["n"] == 4 and sleeps == [5.0, 5.0, 5.0]
+
+    import pytest as _pytest
+
+    with _pytest.raises(ConnectionError):
+        connect_with_retry(
+            lambda: (_ for _ in ()).throw(ConnectionError("dead")),
+            attempts=3,
+            sleep=sleeps.append,
+        )
