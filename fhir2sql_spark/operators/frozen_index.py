@@ -236,9 +236,15 @@ def persist_index(
     the catalog-backed read — the layout under which the probe join
     consumes the stored side with no exchange and no sort.
     ``mode="append"`` is the per-ingest-shard form: each shard's rows
-    land in the same bucketed table (bucket files accumulate per
-    append; Spark unions same-bucket files at read with the bucket
-    spec intact)."""
+    land in the same bucketed table with the bucket spec intact, so
+    the probe join still reads the stored side with no exchange.
+    The limit: every write adds up to one more file per bucket per
+    write task and nothing merges them, so a bucket becomes a growing
+    list of separately sorted files, not one sorted file. The probe's
+    sort-merge join sorts the stored side either way (a twice-appended
+    index plans ``Sort`` over a ``Bucketed: true`` scan, the same as a
+    single write), so appends cost small files, not a shuffle; rewrite
+    with ``mode="overwrite"`` to compact."""
     (
         df.write.mode(mode)
         .bucketBy(buckets, *bucket_cols)

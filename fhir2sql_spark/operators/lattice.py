@@ -1,13 +1,11 @@
-"""Integer-lattice k-means: an engine-portable TRAINED codebook.
+"""Integer-lattice k-means: the engine's one TRAINED-codebook path.
 
 Round-6 graduation of the trained-codebook triple (q_embed_ivf_trained,
 q_embed_pq_trained, q_dedup_semantic_trained) from rows-only to exact
-DuckDB hash oracles. The float spherical/L2 trainers
-(operators/similarity.py kmeans_codebook, operators/pq.py
-pq_train_codebooks) remain the 100 TB scale path — their BLAS
-accumulation order is engine-specific, so their codebooks can never be
-replayed bit-exactly in SQL. This module trains on an INTEGER LATTICE
-instead, which makes every step of Lloyd's algorithm exactly
+DuckDB hash oracles. Float Lloyd's cannot be replayed bit-exactly in
+SQL (its BLAS accumulation order is engine-specific), so the IVF
+coarse codebook and the PQ books are both trained here, on an INTEGER
+LATTICE, which makes every step of Lloyd's algorithm exactly
 computable by both engines:
 
 - quantize: ``q_d = CAST(ROUND(e_d * scale) AS BIGINT)`` — float32 ->
@@ -36,12 +34,11 @@ coarse partitioning role a codebook plays — and the search distances
 returned are EXACT integers, so no rounding tolerance is needed
 anywhere downstream.
 
-Scale shape (same as the float trainers): per round the codebook
-(k rows) broadcasts, one mapInPandas corpus pass emits per-cell
-integer PARTIAL sums (k x dim per Arrow batch — the only shuffle is
-input-size-independent), means reassemble JVM-side. The corpus never
-shuffles; assignment/search passes are fused Arrow/numpy like
-operators/pq.py.
+Scale shape: per round the codebook (k rows) broadcasts, one
+mapInPandas corpus pass emits per-cell integer PARTIAL sums (k x dim
+per Arrow batch — the only shuffle is input-size-independent), means
+reassemble JVM-side. The corpus never shuffles; assignment/search
+passes are fused Arrow/numpy like operators/pq.py.
 
 Reference: samply/fhir2sql (src/main.rs) has no vector surface; this
 extends SURVEY.md §2.4's similarity-search family.
@@ -103,8 +100,7 @@ def materialize(qv: DataFrame) -> DataFrame:
 def _seed_codebook(qv: DataFrame, k: int) -> list:
     """First ``k`` (md5(vid), vid)-ordered quantized vectors as
     [(cent_id, np.array)] — the bounded (k-row) driver materialization
-    every trainer round shares (same budget as kmeans_codebook's
-    k-row collect)."""
+    every trainer round shares."""
     import numpy as np
 
     rows = (

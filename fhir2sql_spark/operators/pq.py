@@ -15,10 +15,10 @@ operators/similarity.py (hyperplane LSH, IVF flat).
 Spark-first shape (all stages verified in tools/explain_audit.py):
 
   - the codebook is config-sized (m x n_codes x d/m doubles) and
-    BROADCAST — by default the deterministic first-``n_codes`` corpus
-    vectors (oracle-stable, the q_embed_ivf convention; real
-    deployments train per-subspace k-means the same way
-    similarity.kmeans_codebook trains the IVF coarse codebook);
+    BROADCAST — the deterministic first-``n_codes`` corpus vectors
+    (oracle-stable, the q_embed_ivf convention; trained per-subspace
+    books are operators/lattice.py lattice_pq_train, searched by
+    lattice_pq_search);
   - encode + ADC scoring FUSE into one Arrow ``mapInPandas`` pass
     over the corpus: each batch encodes against the broadcast
     codebook (vectorized float64 BLAS argmin) and immediately scores
@@ -50,7 +50,6 @@ def pq_search(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k: for each query vector, the ``k`` corpus vectors with
     the smallest PQ-approximated squared L2 distance (ties -> lowest
@@ -65,58 +64,32 @@ def pq_search(
     takes the FIRST minimum, i.e. the lowest codeword id, matching
     the oracle's ``ORDER BY d2, cent_id`` tie rule.
 
-    ``codebooks`` supplies TRAINED per-subspace books
-    (pq_train_codebooks' (s, code_id, w) frame — the real-scale
-    configuration); when omitted, the deterministic first-``n_codes``
-    corpus vectors stand in (oracle-stable). The codebook choice
-    changes quantization error, never the plan."""
+    The codebook is the deterministic first-``n_codes`` corpus vectors
+    (oracle-stable); lattice_pq_search is the same plan over trained
+    integer books."""
     import numpy as np
     import pandas as pd
 
     q_rows = queries.select(id_col, vec_col).collect()
     spark = corpus.sparkSession
     out_schema = "q_id long, c_id long, adist double"
-    if codebooks is not None:
-        cb_rows = codebooks.orderBy("s", "code_id").collect()
-        if not cb_rows or not q_rows:
-            return spark.createDataFrame([], out_schema + ", rn int")
-        n_codes = max(r["code_id"] for r in cb_rows) + 1
-        sub = len(cb_rows[0]["w"])
-        if len(cb_rows) != m * n_codes:
-            raise ValueError(
-                f"pq_search: codebook has {len(cb_rows)} rows, expected "
-                f"m*n_codes = {m}*{n_codes} (one (s, code_id) row each)"
-            )
-        books = np.array(
-            [r["w"] for r in cb_rows], dtype=np.float64
-        ).reshape(m, n_codes, sub)
-        dim = sub * m
-    else:
-        cb_rows = (
-            corpus.orderBy(id_col)
-            .limit(n_codes)
-            .select(vec_col)
-            .collect()
-        )
-        if not cb_rows or not q_rows:
-            return spark.createDataFrame([], out_schema + ", rn int")
-        cb = np.array([r[vec_col] for r in cb_rows], dtype=np.float64)
-        dim = cb.shape[1]
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        sub = dim // m
-        books = np.stack(
-            [cb[:, s * sub : (s + 1) * sub] for s in range(m)]
-        )
+    cb_rows = corpus.orderBy(id_col).limit(n_codes).select(vec_col).collect()
+    if not cb_rows or not q_rows:
+        return spark.createDataFrame([], out_schema + ", rn int")
+    cb = np.array([r[vec_col] for r in cb_rows], dtype=np.float64)
+    dim = cb.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    books = np.stack([cb[:, s * sub : (s + 1) * sub] for s in range(m)])
     # (m, n_codes, sub) codebook + per-subspace squared norms
     book_n2 = (books**2).sum(axis=2)  # (m, n_codes)
 
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
     qm = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    # trained-codebook path: dim is INFERRED as sub*m from the book
-    # rows, so a width mismatch with the actual vectors would silently
-    # score only the leading sub*m dims via the slice (ADVICE r5) —
-    # fail loudly instead. The corpus side gets the same check in gen().
+    # a width mismatch with the codebook would silently score only the
+    # leading sub*m dims via the slice (ADVICE r5) — fail loudly
+    # instead. The corpus side gets the same check in gen().
     if qm.shape[1] != dim:
         raise ValueError(
             f"pq_search: query vectors have dim {qm.shape[1]} but the "
@@ -319,122 +292,3 @@ def ivfpq_search(
         .where(F.col("rn") <= k)
         .select("q_id", "c_id", "adist", "rn")
     )
-
-
-def pq_train_codebooks(
-    corpus: DataFrame,
-    m: int = 4,
-    n_codes: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """Distributed per-subspace L2 k-means — trains real PQ codebooks
-    (Lloyd's on each subvector slice), replacing the deterministic
-    first-``n_codes`` stand-in the exact-oracle queries use. Returns
-    ``(s int, code_id int, w array<double>)``: ``n_codes`` codewords
-    per subspace.
-
-    Same shape discipline as similarity.kmeans_codebook (the IVF
-    coarse trainer): deterministic k-center init per subspace over a
-    bounded hash-ordered pool (one TakeOrdered job); then per round
-    ONE fused Arrow ``mapInPandas`` pass assigns every subvector of
-    every batch against the broadcast codebooks and emits per-
-    partition PARTIAL SUMS — m x n_codes x (d/m + 1) values per
-    partition, input-size-independent — re-assembled driver-side
-    (k-row scale, KBs). Empty cells keep their previous codeword. At
-    100 TB: train on a hash sample (``sample_mod``) with the corpus
-    only ever seeing the final broadcast books."""
-    import numpy as np
-    import pandas as pd
-
-    v = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-    if sample_mod is not None and sample_mod > 1:
-        v = v.where(
-            F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(sample_mod)) == 0
-        )
-    hashed = v.select(
-        "vid", F.xxhash64("vid", F.lit(seed)).alias("h"), "vec"
-    )
-    pool_n = max(8 * n_codes, 256)
-    pool = np.array(
-        [r["vec"] for r in hashed.orderBy("h").limit(pool_n).collect()],
-        dtype=np.float64,
-    )
-    if pool.shape[0] < n_codes:
-        raise ValueError(
-            f"pq_train_codebooks: pool of {pool.shape[0]} < n_codes={n_codes}"
-        )
-    dim = pool.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-
-    books = np.empty((m, n_codes, sub))
-    for s in range(m):
-        ps = pool[:, s * sub : (s + 1) * sub]
-        chosen = [0]
-        d2 = ((ps - ps[0]) ** 2).sum(axis=1)
-        while len(chosen) < n_codes:
-            nxt = int(np.argmax(d2))  # farthest point (L2 k-center)
-            chosen.append(nxt)
-            d2 = np.minimum(d2, ((ps - ps[nxt]) ** 2).sum(axis=1))
-        books[s] = ps[chosen]
-
-    out_schema = "s int, j int, cnt long, vsum array<double>"
-    data = v.select("vec").localCheckpoint(eager=False)
-    for _ in range(iters):
-        bks = books.copy()
-        bn2 = (bks**2).sum(axis=2)
-
-        def part(batches, bks=bks, bn2=bn2):
-            sums = np.zeros((m, n_codes, sub))
-            cnts = np.zeros((m, n_codes), dtype=np.int64)
-            seen = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                seen = True
-                X = np.array(list(pdf["vec"]), dtype=np.float64)
-                for s in range(m):
-                    xs = X[:, s * sub : (s + 1) * sub]
-                    d2 = (
-                        (xs**2).sum(axis=1)[:, None]
-                        - 2.0 * (xs @ bks[s].T)
-                        + bn2[s][None, :]
-                    )
-                    a = d2.argmin(axis=1)
-                    np.add.at(sums[s], a, xs)
-                    np.add.at(cnts[s], a, 1)
-            if seen:
-                rows = [
-                    (s, j, int(cnts[s, j]), sums[s, j].tolist())
-                    for s in range(m)
-                    for j in range(n_codes)
-                ]
-                yield pd.DataFrame(
-                    rows, columns=["s", "j", "cnt", "vsum"]
-                )
-
-        parts = data.mapInPandas(part, out_schema).collect()
-        sums = np.zeros((m, n_codes, sub))
-        cnts = np.zeros((m, n_codes), dtype=np.int64)
-        for r in sorted(parts, key=lambda r: (r["s"], r["j"])):
-            sums[r["s"], r["j"]] += np.array(r["vsum"])
-            cnts[r["s"], r["j"]] += r["cnt"]
-        for s in range(m):
-            for j in range(n_codes):
-                if cnts[s, j] > 0:
-                    books[s, j] = sums[s, j] / cnts[s, j]
-
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [
-            (s, j, books[s, j].tolist())
-            for s in range(m)
-            for j in range(n_codes)
-        ],
-        "s int, code_id int, w array<double>",
-    ).localCheckpoint(eager=True)

@@ -177,7 +177,6 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus against
     a small centroid codebook, then search only the n_probe closest
@@ -187,24 +186,18 @@ def ivf_topk(
     — Arrow/numpy argmax against the broadcast codebook), so the
     search is a (query-cell x corpus-cell) equi-join with the tiny
     query side broadcast: the corpus never shuffles at all; candidate
-    count ~ corpus x n_probe / n_centroids. ``centroids`` (cent_id
-    int, cent_vec array) supplies a trained codebook — see
-    kmeans_codebook for the distributed Lloyd's trainer; when omitted,
-    the first n_centroids corpus vectors stand in (deterministic,
-    oracle-stable, but cell populations grow with N — at real scale
-    always pass a trained codebook with n_centroids ∝ sqrt(N)). The
-    codebook choice changes recall, never the plan; candidate cosines
-    for the exact re-rank stay in the JVM-side sequential fold."""
-    if centroids is not None:
-        cents = centroids.select("cent_id", "cent_vec")
-    else:
-        cents = (
-            corpus.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
-            )
-        )
+    count ~ corpus x n_probe / n_centroids. The codebook is the first
+    n_centroids corpus vectors (deterministic, oracle-stable, but cell
+    populations grow with N). The trained codebook is
+    operators/lattice.py: lattice_kmeans + lattice_ivf_topk, the same
+    plan over integer squared L2, with n_centroids ∝ sqrt(N) at real
+    scale. Candidate cosines for the exact re-rank stay in the
+    JVM-side sequential fold."""
+    cents = (
+        corpus.orderBy(id_col)
+        .limit(n_centroids)
+        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
+    )
     # Cell assignment is a map-side Arrow/numpy argmax against the
     # broadcast codebook matrix (config-sized: k x dim float64) — no
     # shuffle, no per-row expression tree. Dense vector math belongs
@@ -506,185 +499,12 @@ def cosine_near_pairs_bucketed_bulk(
     return pairs.dropDuplicates(["id_a", "id_b"])
 
 
-def kmeans_codebook(
-    vectors: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """Deterministic distributed spherical k-means (Lloyd's) — trains
-    the IVF coarse codebook. Returns (cent_id int, cent_vec
-    array<double>) with unit-norm centroids.
-
-    No ML pipeline state, reproducible from the seed; dense vector
-    math runs in Arrow-batched BLAS (the slow paths it replaced — a
-    crossJoin + max(struct) shuffle and a literal-array HOF fold —
-    both measured 2-5x worse, since HOFs are CodegenFallback):
-
-    - init: deterministic farthest-point (k-center) seeding over a
-      bounded candidate pool — the pool is the max(8k, 256) vectors
-      with the smallest xxhash64(id, seed) (one TakeOrdered job:
-      per-partition heap, never a global sort), greedily k-centered in
-      numpy on the driver. The pool and the k-row codebook are the
-      ONLY driver materializations — KBs, independent of corpus size;
-    - assign+update fused per round: one mapInPandas pass — each Arrow
-      batch argmaxes its block against the broadcast codebook matrix
-      (unit vectors, so the dot IS the cosine; ties -> lowest cent_id
-      via first-max) and emits per-cell PARTIAL SUMS (k x dim per
-      batch), so the only shuffle per round carries k x batches x dim
-      values — input-size-independent, the same partial-aggregate
-      shape a built-in avg would plan;
-    - means re-assembled + renormalized JVM-side (k rows); empty cells
-      keep their previous centroid (left-join coalesce); per-round
-      localCheckpoint pins the k-row codebook so lineage stays O(1)
-      across iterations.
-
-    At 100 TB: train on a hash sample (``sample_mod=m`` keeps ~1/m of
-    vectors — deterministic, partition-local, no shuffle) with
-    k ∝ sqrt(N); the full corpus only ever sees the final broadcast
-    codebook via ivf_topk's assignment."""
-    v = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-    if sample_mod is not None and sample_mod > 1:
-        v = v.where(F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(sample_mod)) == 0)
-    # Normalization happens inside the numpy assignment batches (and
-    # driver-side for the init pool), NOT as a JVM transform lambda: a
-    # `x / sqrt(aggregate(...))` expression re-evaluates the norm fold
-    # per ELEMENT (HOFs are CodegenFallback — no subexpression
-    # elimination), which alone cost more than the whole BLAS argmax.
-    normed = v.select(
-        "vid", F.xxhash64("vid", F.lit(seed)).alias("h"), "vec"
-    ).localCheckpoint(eager=False)
-
-    import numpy as np
-
-    pool_n = max(8 * k, 256)
-    pool = np.array(
-        [r["vec"] for r in normed.orderBy("h").limit(pool_n).collect()],
-        dtype=np.float64,
-    )
-    if pool.shape[0] == 0:
-        raise ValueError("kmeans_codebook: no vectors to train on")
-    pool_norms = np.linalg.norm(pool, axis=1)
-    pool_norms[pool_norms == 0] = 1.0
-    pool = pool / pool_norms[:, None]
-    chosen = [0]  # pool is hash-ordered, so pool[0] is the seed draw
-    sims = pool @ pool[0]
-    while len(chosen) < min(k, pool.shape[0]):
-        nxt = int(np.argmin(sims))  # least similar to all chosen seeds
-        chosen.append(nxt)
-        sims = np.maximum(sims, pool @ pool[nxt])
-    spark = vectors.sparkSession
-    cents = spark.createDataFrame(
-        [(i, pool[c].tolist()) for i, c in enumerate(chosen)],
-        "cent_id int, cent_vec array<double>",
-    ).localCheckpoint(eager=True)
-
-    import pandas as pd
-
-    sc = vectors.sparkSession.sparkContext
-    for _ in range(iters):
-        # assignment is a map-side Arrow/numpy argmax against the
-        # broadcast codebook matrix (k rows collected per round — the
-        # codebook itself, config-sized): no crossJoin, no per-vector
-        # shuffle. nvec and cent_vec are unit-norm, so the dot IS the
-        # cosine; numpy argmax takes the FIRST max, and the matrix is
-        # cent_id-ordered — tie-break = lowest cent_id, same as the
-        # previous max(struct) form.
-        cent_rows = cents.orderBy("cent_id").collect()
-        code = np.array([r["cent_vec"] for r in cent_rows], dtype=np.float64)
-        cids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
-        bc = sc.broadcast((cids, code))
-
-        # each Arrow batch emits per-cell PARTIAL SUMS (k rows x dim),
-        # not per-vector rows: the shuffle carries k x batches x dim
-        # values instead of vectors x dim — input-size-independent
-        # after the map side, the same partial-aggregate shape a
-        # built-in avg would plan
-        def stats_batches(it, _bc=bc):  # bind THIS round's broadcast
-            b_cids, b_code = _bc.value
-            k_now, dim_now = b_code.shape
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                x = np.array(pdf["vec"].tolist(), dtype=np.float64)
-                xn = np.linalg.norm(x, axis=1, keepdims=True)
-                xn[xn == 0] = 1.0
-                xu = x / xn
-                idx = np.argmax(xu @ b_code.T, axis=1)
-                sums = np.zeros((k_now, dim_now), dtype=np.float64)
-                np.add.at(sums, idx, xu)
-                counts = np.bincount(idx, minlength=k_now)
-                nz = np.nonzero(counts)[0]
-                yield pd.DataFrame(
-                    {
-                        "cell": b_cids[nz].astype("int32"),
-                        "cnt": counts[nz].astype("int64"),
-                        "vsum": [list(s) for s in sums[nz]],
-                    }
-                )
-
-        stats = normed.select("vec").mapInPandas(
-            stats_batches, "cell int, cnt long, vsum array<double>"
-        )
-        comp = stats.select(
-            "cell", "cnt", F.posexplode("vsum").alias("pos", "val")
-        )
-        # sum(cnt) per (cell, pos): each batch contributes its cell
-        # count once per dimension, so this is the total cell count
-        means = (
-            comp.groupBy("cell", "pos")
-            .agg(F.sum("val").alias("s"), F.sum("cnt").alias("c"))
-            .select("cell", "pos", (F.col("s") / F.col("c")).alias("m"))
-        )
-        raw = (
-            means.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                F.col("cell").alias("cent_id"),
-                F.expr("transform(pm, x -> x.m)").alias("raw"),
-            )
-            .withColumn(
-                "nrm",
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with("raw", "raw", lambda a, b: a * b),
-                        F.lit(0.0),
-                        lambda acc, y: acc + y,
-                    )
-                ),
-            )
-            .select(
-                "cent_id",
-                F.when(
-                    F.col("nrm") > 0,
-                    F.expr("transform(raw, x -> x / nrm)"),
-                ).alias("new_vec"),
-            )
-        )
-        cents = (
-            cents.join(raw, "cent_id", "left")
-            .select(
-                "cent_id", F.coalesce("new_vec", "cent_vec").alias("cent_vec")
-            )
-            .localCheckpoint(eager=True)
-        )
-        # the eager checkpoint above ran every job that reads this
-        # round's broadcast — release it so a long-lived session
-        # doesn't accumulate one codebook matrix per round
-        bc.unpersist(False)
-    return cents
-
-
 def semantic_dedup(
     corpus: DataFrame,
     tau: float = 0.4,
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): coarse-cluster the corpus, then mark as
@@ -698,27 +518,22 @@ def semantic_dedup(
     ivf_topk above — lowest cent_id on a tie); the quadratic pairwise
     stage is confined within cells, so total work is
     sum(cell_size^2) ≈ N^2 / n_centroids with a balanced codebook —
-    pick n_centroids ∝ sqrt(N) (trained via kmeans_codebook) and the
-    per-cell work stays constant as the corpus grows. The only
-    shuffle is the cell equi-join.
+    with n_centroids ∝ sqrt(N) the per-cell work stays constant as the
+    corpus grows. The only shuffle is the cell equi-join.
 
     Returns ``(id_col, cell int, is_dup boolean)`` for every corpus
-    row. When ``centroids`` is omitted the codebook is the first
-    ``n_centroids`` corpus vectors by id (deterministic,
-    oracle-replayable — the q_embed_ivf convention)."""
+    row. The codebook is the first ``n_centroids`` corpus vectors by
+    id (deterministic, oracle-replayable — the q_embed_ivf
+    convention); the trained-codebook form is operators/lattice.py
+    lattice_semantic_dedup."""
     import numpy as np
     import pandas as pd
 
-    if centroids is not None:
-        cents = centroids.select("cent_id", "cent_vec")
-    else:
-        cents = (
-            corpus.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
-            )
-        )
+    cents = (
+        corpus.orderBy(id_col)
+        .limit(n_centroids)
+        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
+    )
     cent_rows = cents.orderBy("cent_id").collect()
     if not cent_rows:
         return corpus.sparkSession.createDataFrame(

@@ -1446,10 +1446,8 @@ def q_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot/norms — ~1e-15 relative drift) which can only flip a cell
     assignment on a near-exact centroid tie; the gaussian fixture has
     none, and the final cosines are 4-dp rounded on both sides.
-    q_embed_ivf_trained stays rows-only: its k-means codebook is
-    genuinely iterative/non-SQL, but it shares this exact-checked
-    search plan and its codebook is property-tested
-    (tests/test_llm_ops.py recall floor + cell balance)."""
+    q_embed_ivf_trained is the trained form: the same search plan over
+    an integer-lattice k-means codebook."""
     emb = load(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         emb.where(F.col("vec_id") < 10), emb, k=5, n_centroids=16, n_probe=4
@@ -1466,9 +1464,10 @@ def q_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (md5-seeded init, int64 L2, ROUND(SUM/COUNT) updates), so the full
 # train -> search pipeline unrolls into MATERIALIZED CTEs — the
 # q_graph_pagerank unroll composed with the q_dedup_minhash_portable
-# md5 seeding, exactly as VERDICT r5 prescribed. The float trainers
-# (kmeans_codebook, pq_train_codebooks) remain the scale path,
-# property-tested in tests/ (recall floors, MSE, cell balance).
+# md5 seeding, exactly as VERDICT r5 prescribed. These lattice trainers
+# are the engine's only trained-codebook path; recall, MSE and cell
+# balance are property-tested in tests/test_lattice.py,
+# tests/test_llm_ops.py and tests/test_ann_quality.py.
 # ---------------------------------------------------------------------------
 
 _LATTICE_SCALE = 1000
@@ -1584,9 +1583,8 @@ def q_embed_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled MATERIALIZED CTEs. Search distances are EXACT int64
     squared L2 — no rounding tolerance anywhere. Same search plan as
     q_embed_ivf (map-side assignment, broadcast probes into the cell
-    equi-join); the float spherical-k-means configuration
-    (kmeans_codebook) stays the scale path, recall/balance
-    property-tested in tests/test_llm_ops.py."""
+    equi-join). Recall and cell balance against the first-N stand-in
+    are property-tested in tests/test_llm_ops.py."""
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
@@ -1781,8 +1779,8 @@ def q_embed_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode+ADC scan is q_embed_pq's hash-checked plan shape with
     integer LUTs, and adist is an exact int64 SUM — order-free, so no
     rounding tolerance and no float-accumulation flake class. The
-    float trainer (pq_train_codebooks) stays the scale path,
-    MSE-property-tested in tests/test_vocab_graph_pq.py."""
+    MSE cut against the first-N books is property-tested in
+    tests/test_lattice.py."""
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")

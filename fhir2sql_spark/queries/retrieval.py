@@ -181,10 +181,10 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (operators/similarity.py semantic_dedup): map-side
     Arrow/numpy cell assignment against the broadcast codebook — the
     corpus never shuffles for assignment — and the quadratic pairwise
-    stage is confined within cells (sum(cell^2) ≈ N^2/k; train the
-    codebook with kmeans_codebook and pick k ∝ sqrt(N) at real
-    scale). Exact oracle: the codebook is deterministic, the pairwise
-    verdict comes from per-cell blocked float64 BLAS whose only
+    stage is confined within cells (sum(cell^2) ≈ N^2/k; at real
+    scale use the trained k ∝ sqrt(N) form, q_dedup_semantic_trained).
+    Exact oracle: the codebook is deterministic, the pairwise verdict
+    comes from per-cell blocked float64 BLAS whose only
     divergence from the oracle's sequential fold is accumulation
     order (~1e-15, vs a measured 1.3e-4 fixture margin to tau —
     asserted in tests/test_round5_ops.py), and the only
@@ -247,15 +247,14 @@ def q_dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with a TRAINED k ~ sqrt(N) codebook, EXACT-oracled
     (round-6 graduation from rows-only): 2 distributed Lloyd rounds
     over the integer lattice (operators/lattice.py — md5-seeded init,
-    integer partial-sum updates; same per-round shape as the float
-    trainer it graduates), then the same-cell pairwise verdict under
-    the EXACT rational predicate cos >= 2/5 <=> dot > 0 AND
+    integer partial-sum updates), then the same-cell pairwise verdict
+    under the EXACT rational predicate cos >= 2/5 <=> dot > 0 AND
     25*dot^2 >= 4*|a|^2*|b|^2 in int64 — both engines agree
     bit-exactly with no threshold-margin argument. Balanced trained
     cells keep the quadratic stage at ~N^2/k = N^1.5 total work
     (the fixed-codebook cell-bloat fix measured at sf10, SCALE.md).
-    The float spherical trainer (kmeans_codebook) remains the scale
-    path, property-tested in tests/test_round5_ops.py."""
+    Clone flagging under a trained codebook is property-tested in
+    tests/test_lattice.py."""
     import math
 
     from fhir2sql_spark.operators import lattice

@@ -4,8 +4,9 @@
 The per-operator tests already pin individual floors; this suite pins
 the RELATIONSHIPS the SCALE.md table claims:
 
-- on clustered data, trained codebooks are at least as good as the
-  first-N stand-ins (IVF exact-recall, PQ cluster precision);
+- on clustered data, the lattice-trained codebooks are at least as
+  good as the first-N stand-ins (IVF exact-recall, PQ cluster
+  precision);
 - every quantizer keeps cluster-level retrieval nearly perfect on
   clustered data even where recall@5 is low (the within-cluster
   fine-ranking artifact the table documents);
@@ -34,14 +35,14 @@ def planted_rows(spark):
 
 
 def test_planted_trained_ivf_beats_or_ties_standin(planted_rows):
-    trained = planted_rows["IVF 16/4 (trained k-means codebook)"]
+    trained = planted_rows["IVF 16/4 (lattice-trained k-means codebook)"]
     standin = planted_rows["IVF 16 cells / 4 probed (first-N codebook)"]
     assert trained["recall_at_5"] >= standin["recall_at_5"]
     assert trained["recall_at_5"] >= 0.95
 
 
 def test_planted_trained_pq_cluster_precision(planted_rows):
-    trained = planted_rows["PQ/ADC m=4 x 16 (trained Lloyd codebooks)"]
+    trained = planted_rows["PQ/ADC m=4 x 16 (lattice-trained Lloyd codebooks)"]
     standin = planted_rows["PQ/ADC m=4 x 16 codes (first-N codewords)"]
     assert trained["cluster_precision"] >= standin["cluster_precision"]
     assert trained["cluster_precision"] >= 0.95

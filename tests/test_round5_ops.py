@@ -304,30 +304,6 @@ def test_semantic_dedup_margin_vs_tau(spark):
     assert margin > 1e-6  # measured 1.3e-4; BLAS drift is ~1e-15
 
 
-def test_semantic_dedup_trained_codebook(spark):
-    """Trained-codebook SemDeDup: every row gets a verdict, planted
-    clones are always dropped (same-cell is guaranteed for exact
-    clones: identical vectors share an argmax), originals survive at
-    tau=0.99."""
-    from fhir2sql_spark.operators import similarity
-
-    emb = (
-        spark.read.parquet(f"{SF_MED}/embeddings.parquet")
-        .where(F.col("vec_id") < 150)
-        .select("vec_id", "embedding")
-    )
-    clones = emb.select((F.col("vec_id") + 1000).alias("vec_id"), "embedding")
-    corpus = emb.unionByName(clones)
-    cents = similarity.kmeans_codebook(corpus, k=12, iters=2, seed=7)
-    out = similarity.semantic_dedup(corpus, tau=0.99, centroids=cents)
-    rows = {r["vec_id"]: (r["cell"], r["is_dup"]) for r in out.collect()}
-    assert len(rows) == 300
-    for vid in range(150):
-        assert rows[vid][0] == rows[vid + 1000][0]
-        assert rows[vid + 1000][1] is True
-    assert not any(rows[v][1] for v in range(150))
-
-
 def test_triangles_property_random_graphs(spark):
     """Hypothesis: degree-ordered distributed counts == brute force on
     random graphs."""

@@ -455,43 +455,6 @@ def test_ivfpq_small_corpus_empty(spark):
     ]
 
 
-def test_pq_trained_codebooks_reduce_mse(spark):
-    """Trained per-subspace books strictly reduce the corpus
-    quantization MSE (the k-means objective the ADC error is made of)
-    vs the untrained first-16 convention, and the trainer is
-    seed-deterministic."""
-    from fhir2sql_spark.operators.pq import pq_train_codebooks
-
-    emb = spark.read.parquet(f"{SF_MED}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    m, n_codes = 4, 16
-    sub = X.shape[1] // m
-
-    def mse(books):
-        tot = 0.0
-        for s in range(m):
-            xs = X[:, s * sub : (s + 1) * sub]
-            d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-            tot += d2.min(axis=1).sum()
-        return tot / len(X)
-
-    untrained = np.stack(
-        [X[:n_codes, s * sub : (s + 1) * sub] for s in range(m)]
-    )
-    tr = pq_train_codebooks(emb, m=m, n_codes=n_codes, iters=3, seed=42)
-    rows1 = sorted(tr.collect(), key=lambda r: (r["s"], r["code_id"]))
-    trained = np.array([r["w"] for r in rows1]).reshape(m, n_codes, sub)
-    assert mse(trained) < mse(untrained) * 0.9  # measured well below
-
-    tr2 = pq_train_codebooks(emb, m=m, n_codes=n_codes, iters=3, seed=42)
-    rows2 = sorted(tr2.collect(), key=lambda r: (r["s"], r["code_id"]))
-    trained2 = np.array([r["w"] for r in rows2]).reshape(m, n_codes, sub)
-    assert np.array_equal(trained, trained2)
-
-
 def test_bpe_encode_matches_python_reference(spark):
     """q_bpe_encode == a pure-python BPE: train 3 merge rounds on the
     word vocabulary (most frequent adjacent pair, ties lexicographic),

@@ -11,14 +11,15 @@ module's CLI).
 Parameterization mirrors the registered queries exactly
 (queries/llm.py q_embed_ann/ivf/ivf_trained/pq/pq_trained/ivfpq):
 k=5, queries = vec_id < 10, LSH 8 planes seed 42, IVF 16 cells /
-4 probed, PQ m=4 x 16 codes, trained variants via the float
-distributed trainers (kmeans_codebook, pq_train_codebooks — the
-scale-path configuration; the registered _trained queries use the
-integer-lattice twins for oracle exactness, same algorithm).
+4 probed, PQ m=4 x 16 codes, trained variants via the integer-lattice
+trainers the registered _trained queries run (operators/lattice.py:
+lattice_kmeans + lattice_ivf_topk, lattice_pq_train +
+lattice_pq_search, 2 Lloyd rounds each, on quantize(emb)).
 
 Recall is measured against the exact baseline OF EACH METHOD'S
 METRIC: cosine methods (LSH, IVF flat re-rank) against brute-force
-cosine top-k; L2/ADC methods (PQ, IVF-PQ) against brute-force squared
+cosine top-k; L2/ADC methods (PQ, IVF-PQ, both lattice-trained rows,
+whose distances are integer squared L2) against brute-force squared
 L2 top-k. The fixture's embeddings are NOT normalized, so the two
 exact baselines genuinely differ — comparing an ADC ranking to a
 cosine baseline would conflate metric choice with quantization loss.
@@ -41,7 +42,8 @@ if str(_REPO) not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from fhir2sql_spark.operators import pq, similarity  # noqa: E402
+from fhir2sql_spark.operators import lattice, pq, similarity  # noqa: E402
+from fhir2sql_spark.session import get_spark  # noqa: E402
 from fhir2sql_spark.tables import load  # noqa: E402
 
 K = 5
@@ -172,8 +174,10 @@ def ann_quality(
             "sec": round(dt, 2),
         }
 
-    cents = similarity.kmeans_codebook(emb, k=16, iters=2, seed=42)
-    books = pq.pq_train_codebooks(emb, m=4, n_codes=16, iters=3, seed=42)
+    qv = lattice.materialize(lattice.quantize(emb))
+    q_qv = lattice.quantize(q)
+    cents = lattice.lattice_kmeans(qv, k=16, iters=2)
+    books = lattice.lattice_pq_train(qv, m=4, n_codes=16, iters=2)
 
     rows = [
         {
@@ -203,9 +207,9 @@ def ann_quality(
             lambda: similarity.ivf_topk(q, emb, k=K, n_centroids=16, n_probe=4),
         ),
         run(
-            "IVF 16/4 (trained k-means codebook)",
-            "cosine",
-            lambda: similarity.ivf_topk(q, emb, k=K, n_probe=4, centroids=cents),
+            "IVF 16/4 (lattice-trained k-means codebook)",
+            "l2",
+            lambda: lattice.lattice_ivf_topk(q_qv, qv, cents, k=K, n_probe=4),
         ),
         run(
             "PQ/ADC m=4 x 16 codes (first-N codewords)",
@@ -213,9 +217,9 @@ def ann_quality(
             lambda: pq.pq_search(q, emb, k=K, m=4, n_codes=16),
         ),
         run(
-            "PQ/ADC m=4 x 16 (trained Lloyd codebooks)",
+            "PQ/ADC m=4 x 16 (lattice-trained Lloyd codebooks)",
             "l2",
-            lambda: pq.pq_search(q, emb, k=K, m=4, n_codes=16, codebooks=books),
+            lambda: lattice.lattice_pq_search(q_qv, qv, books, k=K, m=4),
         ),
         run(
             "IVF-PQ 16 cells x 16 codes, 4 probed",
@@ -250,13 +254,7 @@ def markdown_table(rows: list[dict]) -> str:
 
 if __name__ == "__main__":
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("ann-quality")
-        .getOrCreate()
-    )
+    spark = get_spark("ann-quality")
     spark.sparkContext.setLogLevel("ERROR")
     rows = ann_quality(spark, sf_dir)
     print(f"## iid-gaussian fixture ({sf_dir})")
