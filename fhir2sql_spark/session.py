@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+import fhir2sql_spark
+
 
 def driver_memory() -> str:
     """``SPARK_GRAFT_DRIVER_MEM`` when set, else half of physical memory
@@ -97,6 +99,13 @@ def get_spark(app_name: str = "fhir2sql-spark") -> SparkSession:
         # local or cluster. Static conf — must be set before the JVM
         # starts.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
+        # Python workers import the package from where the driver found
+        # it, not only from their working directory or PYTHONPATH; Spark
+        # merges this path with its own and any inherited PYTHONPATH.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(fhir2sql_spark.__file__))),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

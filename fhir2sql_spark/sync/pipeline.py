@@ -1,12 +1,15 @@
 """The sync pipeline — the fhir2sql-equivalent product (SURVEY §7 M4).
 
-Per resource type, mirroring the reference's ``run_sync`` /
-``sync_blaze_2_pg`` (src/main.rs:176-339), in ONE pass over the source:
-bundle pages -> version extraction -> distributed diff vs the mirror
-snapshot (the driver-side BTreeMap replaced by the join in
-sync/diff.py) -> one summary collect (op counts, pk allocation) -> one
-parameterized apply job (insert/update/delete) -> count
-reconciliation.
+The reference's ``run_sync`` / ``sync_blaze_2_pg`` (src/main.rs:
+176-339) syncs its resource types one after another. Here every type
+goes through ONE pass: each type's bundle pages and mirror snapshot
+are tagged with their mirror table and unioned -> version extraction
+-> distributed diff on ``(table, res_key)`` vs the mirror snapshots
+(the driver-side BTreeMap replaced by the join in sync/diff.py) -> one
+summary collect (op counts, pk allocation per table) -> one
+parameterized apply job whose partitions write each row to its own
+table -> count reconciliation per table. One type is the one-table
+case of the same pass.
 
 Invariants (property-tested in tests/test_sync_properties.py, from
 the reference's doc comment src/main.rs:159-175):
@@ -19,8 +22,12 @@ the reference's doc comment src/main.rs:159-175):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import json
 from collections.abc import Callable
+from contextlib import closing
+from dataclasses import dataclass
+from functools import reduce
+from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -34,9 +41,11 @@ from fhir2sql_spark.sync.fhir import extract_versions, is_well_formed, partition
 # Parallelism of insert-pk allocation (buckets = concurrent tasks).
 _PK_BUCKETS = 64
 
-MIRROR_SCHEMA = StructType(
-    [StructField("pk_id", IntegerType()), StructField("resource", StringType())]
-)
+MIRROR_SCHEMA = StructType([
+    StructField("table", StringType()),
+    StructField("pk_id", IntegerType()),
+    StructField("resource", StringType()),
+])
 
 
 @dataclass
@@ -63,11 +72,13 @@ def _mirror_pk(mirror_raw: DataFrame) -> Column:
 
 
 def extract_mirror_versions(mirror_raw: DataFrame) -> DataFrame:
-    """(pk_id|id, resource) -> (pk_id, res_key, mir_version), fully
-    distributed — the version-extraction half of the reference's
-    full-scan + BTreeMap build (src/main.rs:49-75). Unparseable rows
-    are skipped (src/main.rs:60-63) via the null-extraction filter."""
+    """(table, pk_id|id, resource) -> (table, pk_id, res_key,
+    mir_version), fully distributed — the version-extraction half of
+    the reference's full-scan + BTreeMap build (src/main.rs:49-75).
+    Unparseable rows are skipped (src/main.rs:60-63) via the
+    null-extraction filter."""
     ext = mirror_raw.select(
+        "table",
         _mirror_pk(mirror_raw).alias("pk_id"),
         F.get_json_object("resource", "$.id").alias("res_key"),
         F.get_json_object("resource", "$.meta.versionId")
@@ -80,12 +91,12 @@ def extract_mirror_versions(mirror_raw: DataFrame) -> DataFrame:
 
 
 def read_mirror_versions(
-    spark: SparkSession, connect_fn: Callable[[], object], table: str
+    spark: SparkSession, connect_fn: Callable[[], object], *tables: str
 ) -> DataFrame:
-    """Raw mirror snapshot ``(pk_id, resource)``: the default mirror
-    read of ``sync_resources`` when no ``mirror_df`` is given, and so
-    of ``run_sync``, ``stream_sync`` and the CLI. It fetches the whole
-    table through one driver-side connection (the in-process
+    """Raw mirror snapshot ``(table, pk_id, resource)`` of ``tables``:
+    the default mirror read of ``sync_resources`` when no ``mirror_df``
+    is given, and so of ``run_sync``, ``stream_sync`` and the CLI. It
+    fetches the tables through one driver-side connection (the in-process
     sqlite/duckdb databases are not visible to executors) and hands the
     rows to the JVM as Arrow batches, so reading the frame runs no
     Python worker task. The fetch inherits the reference's BTreeMap
@@ -93,17 +104,14 @@ def read_mirror_versions(
     memory. Past that, pass ``mirror_df`` (a range-partitioned
     ``spark.read.jdbc`` scan, or any distributed source) so the mirror
     never materializes on the driver."""
-    conn = connect_fn()
-    try:
+    rows = []
+    with closing(connect_fn()) as conn:
         cur = conn.cursor()
-        cur.execute(f"SELECT id, resource FROM {table}")  # noqa: S608
-        rows = cur.fetchall() or []
-    finally:
-        conn.close()
-    # normalize across drivers (the psql adapter fetches text)
-    ids = [int(r[0]) for r in rows]
-    docs = [str(r[1]) for r in rows]
-    return arrow_frame(spark, MIRROR_SCHEMA, [(ids, docs)])
+        for table in tables:
+            cur.execute(f"SELECT id, resource FROM {table}")  # noqa: S608
+            # normalize across drivers (the psql adapter fetches text)
+            rows += [(table, int(pk), str(doc)) for pk, doc in cur.fetchall() or []]
+    return arrow_frame(spark, MIRROR_SCHEMA, [list(zip(*rows))] if rows else [])
 
 
 def sync_resources(
@@ -117,14 +125,8 @@ def sync_resources(
     mirror_df: DataFrame | None = None,
     dialect: str = "ansi",
 ) -> SyncStats:
-    """One full sync of raw source resources into the mirror table, in
-    one pass: the source is scanned ONCE, into the cached ``tagged``
-    diff, while an ``Observation`` on the extracted frame counts
-    well-formed and malformed resources; ONE summary ``collect`` over
-    ``tagged`` (unioned with the raw mirror pks) yields the op counts,
-    the insert-bucket counts and the max pk; ONE ``foreachPartition``
-    job applies the ``(op, pk_id, resource)`` change-set, and none runs
-    when the summary shows nothing to apply.
+    """One full sync of raw source resources into the mirror table: the
+    one-table case of the pass ``run_sync`` makes.
 
     ``strategy``: 'batched' = per-partition parameterized executemany
     (parallel, independent transactions — the reference's flush model
@@ -151,57 +153,102 @@ def sync_resources(
 
     Source-wins semantics: ANY version difference overwrites with the
     source copy (the reference's `<`||`>`, src/main.rs:229-230)."""
+    return _sync_tables(
+        spark, {table: source_resources}, {table: mirror_df}, connect_fn,
+        batch_size, strategy, apply_deletes, dialect,
+    )[table]
+
+
+def _sync_tables(
+    spark: SparkSession, sources: dict[str, DataFrame], mirrors: dict[str, DataFrame | None],
+    connect_fn: Callable[[], object], batch_size: int, strategy: str, apply_deletes: bool,
+    dialect: str,
+) -> dict[str, SyncStats]:
+    """The one pass behind ``sync_resources`` and ``run_sync``:
+    ``sources`` and ``mirrors`` map each mirror table to its raw source
+    resources and its ``mirror_df`` (None: ``read_mirror_versions``).
+    Each source is scanned ONCE, into the cached ``tagged`` diff, while
+    an ``Observation`` on the extracted union counts well-formed and
+    malformed resources per table; ONE summary ``collect`` over
+    ``tagged`` (unioned with the raw mirror pks) yields every table's op
+    counts, insert-bucket counts and max pk; ONE ``foreachPartition``
+    job applies the ``(table, op, pk_id, resource)`` change-set, and
+    none runs when the summary shows nothing to apply."""
+    tables = list(sources)
+    fetched = [t for t in tables if mirrors.get(t) is None]
+    mirror_raw = reduce(DataFrame.unionByName, [
+        m.select(F.lit(t).alias("table"), _mirror_pk(m).alias("pk_id"), "resource")
+        for t, m in mirrors.items() if m is not None
+    ] + ([read_mirror_versions(spark, connect_fn, *fetched)] if fetched else []))
+    # The diff key is (table, res_key): ids repeat across types. Each
+    # source is shuffled on it alone; the union keeps that partitioning
+    # for the diff's join, and AQE runs each source's scan as its own
+    # job. One exchange over the union ran the four `sync_pg` sources'
+    # scans about 1 s later in a resync pass (event log).
+    key = F.struct("table", "res_key")
+    extracted = reduce(DataFrame.unionByName, [
+        extract_versions(src).withColumn("table", F.lit(t)).repartition(key)
+        for t, src in sources.items()
+    ])
+    ok, counts = is_well_formed(), []
+    for i, t in enumerate(tables):
+        mine = F.col("table") == t
+        counts += [F.count_if(ok & mine).alias(f"ok{i}"), F.count_if(~ok & mine).alias(f"bad{i}")]
     seen = Observation()
-    ok = is_well_formed()
-    extracted = extract_versions(source_resources).observe(
-        seen, F.count_if(ok).alias("source_count"), F.count_if(~ok).alias("malformed")
-    )
-    well_formed, _ = partition_malformed(extracted)
-    if mirror_df is None:
-        mirror_df = read_mirror_versions(spark, connect_fn, table)
-    mirror = extract_mirror_versions(mirror_df)
+    well_formed, _ = partition_malformed(extracted.observe(seen, *counts))
     tagged = diff_snapshots(
-        well_formed.select("res_key", "src_version", "resource"),
-        mirror.select("res_key", "mir_version", "pk_id"),
-    ).cache()
+        well_formed.select(key.alias("res_key"), "src_version", "resource"),
+        extract_mirror_versions(mirror_raw).select(key.alias("res_key"), "mir_version", "pk_id"),
+    ).select("res_key.*", "op", "resource", "pk_id").cache()
     try:
-        # Insert pks (the reference lets SERIAL do this): allocated
-        # above the max RAW mirror pk, as unparseable rows hold ids
-        # too. Bucket-parallel, so no single task numbers a whole
+        # Insert pks (the reference lets SERIAL do this): allocated per
+        # table above its max RAW mirror pk, as unparseable rows hold
+        # ids too. Bucket-parallel, so no single task numbers a whole
         # initial load: row_number inside _PK_BUCKETS res_key hash
         # buckets plus per-bucket offsets from the bucket counts. Ids
         # are dense in (bucket, res_key) order, stable across retries.
         bucket = F.pmod(F.xxhash64("res_key"), F.lit(_PK_BUCKETS)).cast("int")
         summary = (
-            tagged.select("op", F.when(F.col("op") == OP_INSERT, bucket).alias("bucket"))
-            .unionByName(
-                mirror_df.select(_mirror_pk(mirror_df).alias("pk")),
-                allowMissingColumns=True,
+            tagged.select(
+                "table", "op", F.when(F.col("op") == OP_INSERT, bucket).alias("bucket")
             )
-            .groupBy("op", "bucket")
+            .unionByName(
+                mirror_raw.select("table", F.col("pk_id").alias("pk")), allowMissingColumns=True
+            )
+            .groupBy("table", "op", "bucket")
             .agg(F.count(F.lit(1)), F.max("pk"))
             .collect()
         )
-        ops = dict.fromkeys((OP_INSERT, OP_UPDATE, OP_DELETE, OP_NOOP), 0)
-        max_pk, buckets = 0, {}
-        for op, b, n, pk in summary:
+        ops = {t: dict.fromkeys((OP_INSERT, OP_UPDATE, OP_DELETE, OP_NOOP), 0) for t in tables}
+        max_pk, buckets = dict.fromkeys(tables, 0), {}
+        for t, op, b, n, pk in summary:
             if op is None:  # the raw mirror rows
-                max_pk = pk or 0
+                max_pk[t] = pk or 0
             else:
-                ops[op] += n
+                ops[t][op] += n
                 if op == OP_INSERT:
-                    buckets[b] = n
-        offsets, acc = [], max_pk
-        for b in sorted(buckets):
-            offsets.append(F.when(F.col("__bucket") == b, F.lit(acc)))
-            acc += buckets[b]
-        offset_col = F.coalesce(*offsets, F.lit(0))
+                    buckets[t, b] = n
+        # offsets[table][bucket], as one JSON literal that planning
+        # folds: a CASE per (table, bucket) pair planned and compiled
+        # for seconds, and a lit() per value costs one py4j call each.
+        offsets = [
+            list(accumulate((buckets.get((t, b), 0) for b in range(_PK_BUCKETS - 1)), initial=max_pk[t]))
+            for t in tables
+        ]
+        table_no = F.array_position(F.array(*map(F.lit, tables)), F.col("table")).cast("int")
+        offset_col = F.from_json(F.lit(json.dumps(offsets)), "array<array<bigint>>")[
+            table_no - 1][F.col("__bucket")]
         applied = [OP_INSERT, OP_UPDATE] + ([OP_DELETE] if apply_deletes else [])
-        w_bucket = Window.partitionBy("op", "__bucket").orderBy("res_key")
+        w_bucket = Window.partitionBy("table", "op", "__bucket").orderBy("res_key")
         changes = (
             tagged.where(F.col("op").isin(applied))
             .withColumn("__bucket", bucket)
+            # One apply partition per core: AQE would coalesce a small
+            # change-set into one partition, so one connection would
+            # write every table's rows alone.
+            .repartition(spark.sparkContext.defaultParallelism, "table", "op", "__bucket")
             .select(
+                "table",
                 "op",
                 F.when(
                     F.col("op") == OP_INSERT,
@@ -211,35 +258,32 @@ def sync_resources(
             )
         )
         apply = jdbc_upsert.merge_changeset if strategy == "merge" else jdbc_upsert.apply_changeset
-        # Nothing to apply (a converged re-sync, an all-noop micro-batch):
-        # no apply job, no connection, no stage table.
-        if any(ops[op] for op in applied):
-            apply(changes, table, connect_fn, batch_size, dialect=dialect)
+        # Tables with nothing to apply (a converged re-sync, an all-noop
+        # micro-batch) get no connection and no stage table; with none
+        # left, no apply job runs.
+        changed = [t for t in tables if any(ops[t][op] for op in applied)]
+        if changed:
+            apply(changes, changed, connect_fn, batch_size, dialect=dialect)
     finally:
         tagged.unpersist()
 
-    conn = connect_fn()
-    try:
+    with closing(connect_fn()) as conn:
         cur = conn.cursor()
-        cur.execute(f"SELECT COUNT(*) FROM {table}")  # noqa: S608
-        mirror_after = int(cur.fetchone()[0])
-    finally:
-        conn.close()
-    if ops[OP_INSERT] + ops[OP_UPDATE] + ops[OP_NOOP]:
-        counts = seen.get
+        cur.execute("SELECT " + ", ".join(f"(SELECT COUNT(*) FROM {t})" for t in tables))  # noqa: S608
+        mirror_after = dict(zip(tables, map(int, cur.fetchone())))
+    if any(ops[t][op] for t in tables for op in (OP_INSERT, OP_UPDATE, OP_NOOP)):
+        got = seen.get
+        counts = {t: (got[f"ok{i}"], got[f"bad{i}"]) for i, t in enumerate(tables)}
     else:
         # No source row was well-formed: AQE drops the empty observed
         # stage from the final plan and the Observation gets no row.
-        counts = {"source_count": 0, "malformed": source_resources.count()}
-    return SyncStats(
-        inserts=ops[OP_INSERT],
-        updates=ops[OP_UPDATE],
-        deletes=ops[OP_DELETE] if apply_deletes else 0,
-        noops=ops[OP_NOOP],
-        malformed=counts["malformed"],
-        source_count=counts["source_count"],
-        mirror_count_after=mirror_after,
-    )
+        n = dict(extracted.groupBy("table").count().collect())
+        counts = {t: (0, n.get(t, 0)) for t in tables}
+    return {t: SyncStats(
+        inserts=ops[t][OP_INSERT], updates=ops[t][OP_UPDATE],
+        deletes=ops[t][OP_DELETE] if apply_deletes else 0, noops=ops[t][OP_NOOP],
+        malformed=counts[t][1], source_count=counts[t][0], mirror_count_after=mirror_after[t],
+    ) for t in tables}
 
 
 def run_sync(
@@ -252,41 +296,19 @@ def run_sync(
     parallel: bool = False,
     dialect: str = "ansi",
 ) -> dict[str, SyncStats]:
-    """Per-type orchestration (R10, src/main.rs:303-339): bootstrap
-    DDL idempotently, then sync each resource type. The reference is
-    strictly sequential (src/main.rs:319-325); types are independent,
-    so ``parallel=True`` submits them as concurrent Spark jobs from
-    one thread per type — the SparkSession schedules them side by
-    side, overlapping each type's scan/shuffle with another's JDBC
-    writes. Safe because every type owns its table and its
-    ``<table>__stage``; ``connect_fn`` must hand out a fresh
-    connection per call (it already must for executor use).
-    ``mirror_by_type`` optionally supplies a distributed mirror
-    DataFrame per resource type (the production JDBC-read path — see
-    ``sync_resources``)."""
-    tables = {
-        rt: f"{table_prefix}{rt.lower()}" for rt in sources_by_type
-    }  # lowercase table naming, src/main.rs:185
-    jdbc_upsert.create_mirror_tables(
-        connect_fn, list(tables.values()), dialect=dialect
-    )
+    """Per-type orchestration (R10, src/main.rs:303-339): bootstrap the
+    DDL idempotently, then sync every resource type in ONE
+    pass, each type into its own lowercase table
+    (src/main.rs:185). ``mirror_by_type`` optionally supplies a
+    distributed mirror DataFrame per resource type (the production
+    JDBC-read path — see ``sync_resources``). ``parallel`` is accepted
+    and ignored; it goes once the benchmark stops passing it."""
+    tables = {rt: f"{table_prefix}{rt.lower()}" for rt in sources_by_type}
+    jdbc_upsert.create_mirror_tables(connect_fn, list(tables.values()), dialect=dialect)
     mirrors = mirror_by_type or {}
-    if not parallel:
-        return {
-            rt: sync_resources(
-                spark, df, connect_fn, tables[rt], batch_size,
-                mirror_df=mirrors.get(rt), dialect=dialect,
-            )
-            for rt, df in sources_by_type.items()
-        }
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(sources_by_type)) as pool:
-        futures = {
-            rt: pool.submit(
-                sync_resources, spark, df, connect_fn, tables[rt],
-                batch_size, mirror_df=mirrors.get(rt), dialect=dialect,
-            )
-            for rt, df in sources_by_type.items()
-        }
-        return {rt: f.result() for rt, f in futures.items()}
+    stats = _sync_tables(
+        spark, {tables[rt]: df for rt, df in sources_by_type.items()},
+        {tables[rt]: mirrors.get(rt) for rt in tables}, connect_fn, batch_size,
+        "batched", True, dialect,
+    )
+    return {rt: stats[t] for rt, t in tables.items()}

@@ -152,44 +152,6 @@ def test_run_sync_multi_type_bootstrap(spark, sqlite_db):
     assert jdbc_upsert.table_exists(sqlite_db, "observation")
 
 
-@pytest.mark.slow
-def test_run_sync_parallel_equals_sequential(spark, sqlite_db):
-    """parallel=True (one concurrent Spark job per resource type) must
-    converge every mirror to the same state the sequential loop does,
-    and a parallel re-run on converged state is all-noop (the
-    reference's daily-rerun idempotence under concurrency)."""
-
-    def _srcs(version):
-        return {
-            rtype: spark.createDataFrame(
-                [
-                    (
-                        json.dumps(
-                            _resource(f"{rtype[:3]}-{i}", version, rtype),
-                            sort_keys=True,
-                        ),
-                    )
-                    for i in range(9)
-                ],
-                "resource string",
-            )
-            for rtype in ["Patient", "Specimen", "Observation", "Condition"]
-        }
-
-    stats = run_sync(spark, _srcs(1), sqlite_db, table_prefix="par_", parallel=True)
-    assert set(stats) == {"Patient", "Specimen", "Observation", "Condition"}
-    assert all(s.inserts == 9 and s.counts_match for s in stats.values())
-
-    rerun = run_sync(spark, _srcs(1), sqlite_db, table_prefix="par_", parallel=True)
-    assert all(
-        s.inserts == 0 and s.updates == 0 and s.deletes == 0 and s.noops == 9
-        for s in rerun.values()
-    )
-
-    bumped = run_sync(spark, _srcs(2), sqlite_db, table_prefix="par_", parallel=True)
-    assert all(s.updates == 9 and s.counts_match for s in bumped.values())
-
-
 def test_bundle_file_datasource(spark, tmp_path):
     pages = _bundle_fixture(n=60, page_size=20)
     for i, (_, bundle) in enumerate(sorted(pages.items())):
@@ -406,10 +368,11 @@ def test_run_sync_accepts_mirror_by_type(spark, sqlite_db):
 
 @pytest.mark.slow
 def test_parallel_sync_no_cross_talk_and_stable_pks(spark, sqlite_db):
-    """Concurrent writers sharing ONE target DB (run_sync parallel=True,
-    4 types x 40 rows): each type's table must hold exactly its own
-    resources, and pk allocation must be STABLE under retry — a
-    re-run of the same snapshot and a version-bump update both leave
+    """Four types through one run_sync pass into ONE target DB (4 types
+    x 40 rows): each type's table must hold exactly its own resources,
+    a re-run on converged state is all-noop (the reference's daily
+    re-run idempotence), and pk allocation must be STABLE under retry —
+    a re-run of the same snapshot and a version-bump update both leave
     every (res_key -> pk_id) assignment unchanged (the M4 pipeline's
     partial-failure contract: replays never re-key the mirror)."""
     types = ["Patient", "Specimen", "Observation", "Condition"]
@@ -444,18 +407,22 @@ def test_parallel_sync_no_cross_talk_and_stable_pks(spark, sqlite_db):
         conn.close()
         return maps
 
-    stats = run_sync(spark, _srcs(1), sqlite_db, table_prefix="ct_", parallel=True)
+    stats = run_sync(spark, _srcs(1), sqlite_db, table_prefix="ct_")
+    assert set(stats) == set(types)
     assert all(s.inserts == 40 and s.counts_match for s in stats.values())
     first = _pk_maps()
     assert all(len(m) == 40 for m in first.values())
 
     # retry of the same snapshot: all-noop, identical pk assignment
-    rerun = run_sync(spark, _srcs(1), sqlite_db, table_prefix="ct_", parallel=True)
-    assert all(s.noops == 40 and s.inserts == 0 for s in rerun.values())
+    rerun = run_sync(spark, _srcs(1), sqlite_db, table_prefix="ct_")
+    assert all(
+        s.noops == 40 and s.inserts == 0 and s.updates == 0 and s.deletes == 0
+        for s in rerun.values()
+    )
     assert _pk_maps() == first
 
     # updates overwrite in place: versions move, pks do not
-    bump = run_sync(spark, _srcs(2), sqlite_db, table_prefix="ct_", parallel=True)
+    bump = run_sync(spark, _srcs(2), sqlite_db, table_prefix="ct_")
     assert all(s.updates == 40 and s.counts_match for s in bump.values())
     assert _pk_maps() == first
 
@@ -531,6 +498,7 @@ def test_merge_failure_rolls_back_and_replay_converges(spark, sqlite_db):
     with pytest.raises(RuntimeError, match="injected"):
         sync_resources(spark, src2, failing_connect, "patient", strategy="merge")
     assert _snapshot() == before, "partial merge leaked through rollback"
+    assert _tables(sqlite_db) == ["patient"], "failed merge left its stage table"
 
     # replay with a healthy connection: full convergence
     stats = sync_resources(spark, src2, sqlite_db, "patient", strategy="merge")
@@ -548,6 +516,111 @@ def _json_frame(spark, resources):
     return spark.createDataFrame(
         [(json.dumps(r, sort_keys=True),) for r in resources], "resource string"
     )
+
+
+_TYPES = ["Patient", "Specimen", "Observation", "Condition"]
+
+
+def _type_frames(spark, n, version=1, malformed=()):
+    """One source per type in ``_TYPES``: ``n`` resources at
+    ``version``, ids prefixed by type, then the ``malformed`` ones."""
+    return {
+        rt: _json_frame(
+            spark, [_resource(f"{rt[:3]}-{i}", version, rt) for i in range(n)] + list(malformed)
+        )
+        for rt in _TYPES
+    }
+
+
+def _mirror_rows(connect_fn, table):
+    """``{pk: (id, versionId)}`` of one mirror table."""
+    conn = connect_fn()
+    rows = conn.execute(
+        f"SELECT id, json_extract(resource, '$.id'),"  # noqa: S608
+        f" json_extract(resource, '$.meta.versionId') FROM {table}"
+    ).fetchall()
+    conn.close()
+    return {pk: (rid, v) for pk, rid, v in rows}
+
+
+def _tables(connect_fn):
+    conn = connect_fn()
+    names = conn.execute("SELECT name FROM sqlite_master WHERE type = 'table'").fetchall()
+    conn.close()
+    return sorted(n for (n,) in names)
+
+
+def test_run_sync_keeps_ids_shared_across_types_apart(spark, sqlite_db):
+    """Patient/x-1 and Observation/x-1 share one id. The diff keys on
+    (table, id), so each table holds its own row, a re-run is all-noop,
+    and a version bump or a deletion touches only its own type."""
+
+    def sync(patients, observation_version):
+        return run_sync(spark, {
+            "Patient": _json_frame(spark, [_resource(p, 1) for p in patients]),
+            "Observation": _json_frame(
+                spark, [_resource("x-1", observation_version, "Observation")]
+            ),
+        }, sqlite_db)
+
+    def stats(inserts=0, updates=0, deletes=0, noops=0, after=1):
+        return SyncStats(
+            inserts=inserts, updates=updates, deletes=deletes, noops=noops,
+            malformed=0, source_count=after, mirror_count_after=after,
+        )
+
+    assert sync(["x-1", "x-2"], 1) == {
+        "Patient": stats(inserts=2, after=2), "Observation": stats(inserts=1),
+    }
+    patients = _mirror_rows(sqlite_db, "patient")
+    assert sorted(patients.values()) == [("x-1", "1"), ("x-2", "1")]
+    assert _mirror_rows(sqlite_db, "observation") == {1: ("x-1", "1")}
+
+    assert sync(["x-1", "x-2"], 1) == {
+        "Patient": stats(noops=2, after=2), "Observation": stats(noops=1),
+    }
+    assert sync(["x-1", "x-2"], 2) == {
+        "Patient": stats(noops=2, after=2), "Observation": stats(updates=1),
+    }
+    assert _mirror_rows(sqlite_db, "patient") == patients
+    assert _mirror_rows(sqlite_db, "observation") == {1: ("x-1", "2")}
+
+    assert sync(["x-2"], 2) == {
+        "Patient": stats(deletes=1, noops=1), "Observation": stats(noops=1),
+    }
+    assert list(_mirror_rows(sqlite_db, "patient").values()) == [("x-2", "1")]
+    assert _mirror_rows(sqlite_db, "observation") == {1: ("x-1", "2")}
+
+
+def test_overlapping_merges_into_one_table_stage_apart(spark, sqlite_db, monkeypatch):
+    """A second merge sync of the same table runs to completion between
+    the first one's stage load and its merge. Each call stages into its
+    own table, so both change-sets land and no stage table is left."""
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    ids = [f"pat-{i}" for i in range(10)]
+    sync_resources(
+        spark, _json_frame(spark, [_resource(p, 1) for p in ids]), sqlite_db, "patient",
+        strategy="merge",
+    )
+    first = _json_frame(spark, [_resource(p, 2 if i < 5 else 1) for i, p in enumerate(ids)])
+    second = _json_frame(spark, [_resource(p, 2 if i >= 5 else 1) for i, p in enumerate(ids)])
+    real, calls, inner = jdbc_upsert.merge_stage_into_target, [], []
+
+    def overlapped(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            inner.append(
+                sync_resources(spark, second, sqlite_db, "patient", strategy="merge")
+            )
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(jdbc_upsert, "merge_stage_into_target", overlapped)
+    outer = sync_resources(spark, first, sqlite_db, "patient", strategy="merge")
+    monkeypatch.undo()
+    assert (inner[0].updates, outer.updates) == (5, 5)
+    assert outer.counts_match
+    assert sorted(_mirror_rows(sqlite_db, "patient").values()) == [(p, "2") for p in ids]
+    assert _tables(sqlite_db) == ["patient"]
 
 
 def _returns_within(seconds, fn, *args, **kwargs):
@@ -598,6 +671,18 @@ def test_insert_pks_skip_unparseable_mirror_rows(spark, sqlite_db, via_mirror_df
     assert rows == {1: "a", 2: "bad", 3: "b"}
 
 
+def _udf_frame(spark, docs, scanned):
+    """A source whose rows come out of a Python UDF that counts every
+    row it produces in the accumulator ``scanned``."""
+
+    @F.udf("string")
+    def doc(i):
+        scanned.add(1)
+        return docs[i]
+
+    return spark.range(len(docs)).select(doc(F.col("id").cast("int")).alias("resource"))
+
+
 def _count_actions(monkeypatch) -> list[str]:
     """Record the name of every outermost DataFrame action from here
     on (until ``monkeypatch.undo()``)."""
@@ -624,8 +709,9 @@ def _count_actions(monkeypatch) -> list[str]:
 
 
 def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
-    """One sync_resources call reads its source once and runs two
-    DataFrame actions: the summary collect and the apply job."""
+    """One sync reads each source once and runs two DataFrame actions:
+    the summary collect and the apply job. That holds for one table
+    through sync_resources and for four types through run_sync."""
     jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
     first = [_resource(f"pat-{i:03d}", 1) for i in range(10)] + [_resource("gone", 1)]
     sync_resources(spark, _json_frame(spark, first), sqlite_db, "patient")
@@ -635,13 +721,7 @@ def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
         for i in range(20)
     ]
     scanned = spark.sparkContext.accumulator(0)
-
-    @F.udf("string")
-    def doc(i):
-        scanned.add(1)
-        return docs[i]
-
-    src = spark.range(len(docs)).select(doc(F.col("id").cast("int")).alias("resource"))
+    src = _udf_frame(spark, docs, scanned)
 
     actions = _count_actions(monkeypatch)
     stats = sync_resources(spark, src, sqlite_db, "patient")
@@ -651,6 +731,25 @@ def test_sync_scans_source_once_in_two_actions(spark, sqlite_db, monkeypatch):
         source_count=20, mirror_count_after=20,
     )
     assert scanned.value == len(docs)
+    assert actions == ["collect", "foreachPartition"]
+
+    run_sync(spark, _type_frames(spark, 4), sqlite_db, table_prefix="four_")
+    scanned = spark.sparkContext.accumulator(0)
+    srcs = {
+        rt: _udf_frame(spark, [
+            json.dumps(_resource(f"{rt[:3]}-{i}", 2 if i < 2 else 1, rt), sort_keys=True)
+            for i in range(6)
+        ], scanned)
+        for rt in _TYPES
+    }
+    actions = _count_actions(monkeypatch)
+    stats = run_sync(spark, srcs, sqlite_db, table_prefix="four_")
+    monkeypatch.undo()
+    assert stats == {rt: SyncStats(
+        inserts=2, updates=2, deletes=0, noops=2, malformed=0,
+        source_count=6, mirror_count_after=6,
+    ) for rt in _TYPES}
+    assert scanned.value == 6 * len(_TYPES)
     assert actions == ["collect", "foreachPartition"]
 
 
@@ -696,22 +795,31 @@ def test_empty_mirror(spark, sqlite_db, via_mirror_df):
     )
 
 
-@pytest.mark.parametrize("strategy", ["batched", "merge"])
+@pytest.mark.parametrize("strategy", ["batched", "merge", "run_sync"])
 def test_converged_resync_runs_only_the_summary_collect(
     spark, sqlite_db, monkeypatch, strategy
 ):
     """A re-sync with nothing to apply stops after the summary collect:
-    no apply job (for merge, no staging job)."""
+    no apply job (for merge, no staging job), also for four types in
+    one run_sync pass."""
+    srcs = _type_frames(spark, 6, malformed=[{"id": "x"}])
+
+    def sync():
+        if strategy == "run_sync":
+            return run_sync(spark, srcs, sqlite_db)
+        return {"Patient": sync_resources(
+            spark, srcs["Patient"], sqlite_db, "patient", strategy=strategy
+        )}
+
     jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
-    src = _json_frame(spark, [_resource(f"pat-{i}", 1) for i in range(6)] + [{"id": "x"}])
-    sync_resources(spark, src, sqlite_db, "patient", strategy=strategy)
+    sync()
     actions = _count_actions(monkeypatch)
-    stats = sync_resources(spark, src, sqlite_db, "patient", strategy=strategy)
+    stats = sync()
     monkeypatch.undo()
-    assert stats == SyncStats(
+    assert stats == {rt: SyncStats(
         inserts=0, updates=0, deletes=0, noops=6, malformed=1,
         source_count=6, mirror_count_after=6,
-    )
+    ) for rt in (_TYPES if strategy == "run_sync" else ["Patient"])}
     assert actions == ["collect"]
 
 
@@ -748,7 +856,7 @@ def test_driver_fetched_frames_run_no_python_worker(spark, sqlite_db, local_rela
         spark.conf.set(conf, threshold)
 
     for df in (mirror, empty_mirror):
-        assert df.schema.simpleString() == "struct<pk_id:int,resource:string>"
+        assert df.schema.simpleString() == "struct<table:string,pk_id:int,resource:string>"
     for df in (walk, empty_walk):
         assert df.schema.simpleString() == "struct<resource:string>"
     for df in (mirror, empty_mirror, walk, empty_walk):
