@@ -152,6 +152,49 @@ def test_run_sync_multi_type_bootstrap(spark, sqlite_db):
     assert jdbc_upsert.table_exists(sqlite_db, "observation")
 
 
+@pytest.mark.slow
+def test_run_sync_parallel_equals_sequential(spark, sqlite_db):
+    """run_sync with the ``parallel`` keyword (still accepted, now one
+    pass over all types) must return the same stats and converge every
+    mirror to the same rows as one ``sync_resources`` call per type in
+    sequence, and a re-run on converged state is all-noop (the
+    reference's daily-rerun idempotence)."""
+
+    def _srcs(version):
+        return _type_frames(spark, 9, version)
+
+    def _sequential(version):
+        jdbc_upsert.create_mirror_tables(sqlite_db, [f"seq_{rt.lower()}" for rt in _TYPES])
+        return {
+            rt: sync_resources(spark, df, sqlite_db, f"seq_{rt.lower()}")
+            for rt, df in _srcs(version).items()
+        }
+
+    def _same_mirrors():
+        for rt in _TYPES:
+            assert _mirror_rows(sqlite_db, f"par_{rt.lower()}") == _mirror_rows(
+                sqlite_db, f"seq_{rt.lower()}"
+            )
+
+    stats = run_sync(spark, _srcs(1), sqlite_db, table_prefix="par_", parallel=True)
+    assert set(stats) == set(_TYPES)
+    assert all(s.inserts == 9 and s.counts_match for s in stats.values())
+    assert stats == _sequential(1)
+    _same_mirrors()
+
+    rerun = run_sync(spark, _srcs(1), sqlite_db, table_prefix="par_", parallel=True)
+    assert all(
+        s.inserts == 0 and s.updates == 0 and s.deletes == 0 and s.noops == 9
+        for s in rerun.values()
+    )
+    assert rerun == _sequential(1)
+
+    bumped = run_sync(spark, _srcs(2), sqlite_db, table_prefix="par_", parallel=True)
+    assert all(s.updates == 9 and s.counts_match for s in bumped.values())
+    assert bumped == _sequential(2)
+    _same_mirrors()
+
+
 def test_bundle_file_datasource(spark, tmp_path):
     pages = _bundle_fixture(n=60, page_size=20)
     for i, (_, bundle) in enumerate(sorted(pages.items())):
