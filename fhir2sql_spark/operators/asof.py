@@ -132,9 +132,10 @@ def asof_join_sorted(
     under a left-anti join — matched and unmatched rows are by
     construction a partition of the left side. NULL-key LEFT rows are
     kept in left mode (they can never match — the semantics the inner
-    flavor implements by filtering them — so they surface with NULL
-    right columns via the window's NULL partition; NULL-key RIGHT rows
-    stay filtered, so that partition carries nothing).
+    flavor implements by filtering them — so they are unioned in after
+    the merge with NULL right columns, never entering the window, where
+    they would all share one NULL partition; NULL-key RIGHT rows stay
+    filtered).
 
     Union both sides tagged by role, sort each key's rows by (ts,
     side, tie), and carry the last-seen right row forward with
@@ -154,8 +155,6 @@ def asof_join_sorted(
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     null_left = left.where(F.col(on).isNull()) if how == "left" else None
     left, right = _check_asof_contract(left, right, on)
-    if null_left is not None:
-        left = left.unionByName(null_left)
     lcols = left.columns
     rcols = right.columns
     payload = F.struct(*[F.col(c) for c in rcols if c != on])
@@ -225,4 +224,13 @@ def asof_join_sorted(
     out_cols = [F.col(c) for c in lcols] + [
         F.col(f"__carried.{c}").alias(c) for c in rcols if c != on
     ]
-    return merged.select(*out_cols)
+    out = merged.select(*out_cols)
+    if null_left is None:
+        return out
+    return out.unionByName(
+        null_left.select(
+            *lcols,
+            *[F.lit(None).cast(right.schema[c].dataType).alias(c)
+              for c in rcols if c != on],
+        )
+    )

@@ -232,23 +232,24 @@ def persist_index(
     buckets: int = 32,
     mode: str = "overwrite",
 ) -> DataFrame:
-    """Write an index bucketed+sorted by its probe join key and return
-    the catalog-backed read — the layout under which the probe join
-    consumes the stored side with no exchange and no sort.
+    """Write an index bucketed by its probe join key and return the
+    catalog-backed read — the layout under which the probe join
+    consumes the stored side with no exchange. The write does not sort
+    within buckets: the probe's sort-merge join sorts the stored side
+    anyway (Spark reports no ordering for a bucketed scan, and a
+    bucket of several files has no single order), so a
+    ``sortBy`` would cost the write a sort that nothing reads.
     ``mode="append"`` is the per-ingest-shard form: each shard's rows
     land in the same bucketed table with the bucket spec intact, so
     the probe join still reads the stored side with no exchange.
     The limit: every write adds up to one more file per bucket per
     write task and nothing merges them, so a bucket becomes a growing
-    list of separately sorted files, not one sorted file. The probe's
-    sort-merge join sorts the stored side either way (a twice-appended
-    index plans ``Sort`` over a ``Bucketed: true`` scan, the same as a
-    single write), so appends cost small files, not a shuffle; rewrite
-    with ``mode="overwrite"`` to compact."""
+    list of files. The probe plans ``Sort`` over a ``Bucketed: true``
+    scan either way, so appends cost small files, not a shuffle;
+    rewrite with ``mode="overwrite"`` to compact."""
     (
         df.write.mode(mode)
         .bucketBy(buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
         .option("path", path)  # external: warehouse.dir is static
         .saveAsTable(name)
     )

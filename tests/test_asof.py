@@ -300,3 +300,66 @@ def test_asof_tolerance_forms_agree_random(spark):
         # tolerance output is a subset of the unbounded output
         unbounded = _collect(asof_join(pdf, edf, **dict(_KW, direction=direction)))
         assert a <= unbounded
+
+
+def _physical_nodes(df) -> list:
+    """Every node of ``df``'s physical plan (AQE's current plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_asof_left_null_keys_bypass_the_window(spark, tmp_path):
+    """how="left" unions NULL-key probes in after the merge, with NULL
+    right columns, so they never enter the window (where all of them
+    would share its one NULL partition). The fixture goes through
+    parquet so the NULL-key filter stays a plan node."""
+    probes = spark.createDataFrame(
+        [
+            (1, 7, "2024-01-01 10:00:00"),
+            (2, None, "2024-01-01 10:00:00"),
+            (3, None, "2024-01-02 10:00:00"),
+            (4, 8, "2024-01-01 00:00:00"),  # no eligible event
+            (5, 8, "2024-01-01 12:00:00"),
+        ],
+        "probe_id long, user_id long, probe_ts string",
+    ).withColumn("probe_ts", F.col("probe_ts").cast("timestamp"))
+    events = spark.createDataFrame(
+        [
+            (100, 7, "2024-01-01 09:00:00"),
+            (101, None, "2024-01-01 09:00:00"),  # NULL right key: filtered
+            (200, 8, "2024-01-01 11:00:00"),
+        ],
+        "event_id long, user_id long, event_ts string",
+    ).withColumn("event_ts", F.col("event_ts").cast("timestamp"))
+    probes.write.parquet(str(tmp_path / "probes"))
+    events.write.parquet(str(tmp_path / "events"))
+    out = asof_join_sorted(
+        spark.read.parquet(str(tmp_path / "probes")),
+        spark.read.parquet(str(tmp_path / "events")),
+        how="left",
+        **_KW,
+    )
+    nodes = _physical_nodes(out)  # before execution replaces it with stages
+    assert out.columns == ["probe_id", "user_id", "probe_ts", "event_id", "event_ts"]
+    assert sorted(out.collect(), key=lambda r: r["probe_id"]) == [
+        (1, 7, datetime(2024, 1, 1, 10), 100, datetime(2024, 1, 1, 9)),
+        (2, None, datetime(2024, 1, 1, 10), None, None),
+        (3, None, datetime(2024, 1, 2, 10), None, None),
+        (4, 8, datetime(2024, 1, 1, 0), None, None),
+        (5, 8, datetime(2024, 1, 1, 12), 200, datetime(2024, 1, 1, 11)),
+    ]
+    windows = [n.toString() for n in nodes if n.nodeName() == "Window"]
+    assert windows
+    assert not any("isnull(user_id" in w for w in windows), windows
+    assert any(
+        n.nodeName() == "Filter" and "isnull(user_id" in n.toString()
+        for n in nodes
+    )

@@ -231,6 +231,38 @@ class TestDistributedRank:
                 else:
                     conf.set(k, prev[k])
 
+    def test_branches_agree_on_pid_when_aqe_coalesces(self, spark):
+        """ADVICE r12: distributed_rank is right only while its counts
+        branch and its join branch see one exchange's partitioning.
+        At a size where AQE coalesces the range exchange to more than
+        one partition, every __pid of the join branch must carry the
+        row count the counts branch gave it, and the ranks must equal
+        a global row_number."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as SF
+
+        n = 300_000
+        df = spark.range(n).select(
+            "id", ((SF.col("id") * 7919) % 100_003).alias("v")
+        )
+        order = [SF.desc("v"), SF.asc("id")]
+        ranged, bound = packing._ranged_by(df, order, None)
+        counts = ranged.groupBy("__pid").agg(SF.count(SF.lit(1)).alias("__cnt"))
+        per_pid = (
+            ranged.join(SF.broadcast(counts), "__pid", "left")
+            .groupBy("__pid")
+            .agg(SF.count(SF.lit(1)).alias("n"), SF.max("__cnt").alias("cnt"))
+            .collect()
+        )
+        assert 1 < len(per_pid) < bound, (len(per_pid), bound)
+        assert all(r["n"] == r["cnt"] for r in per_pid), per_pid
+        got = packing.distributed_rank(df, order).select("id", "rnk")
+        want = df.select(
+            "id", (SF.row_number().over(Window.orderBy(*order)) - 1).alias("rnk")
+        )
+        assert got.count() == n
+        assert got.exceptAll(want).count() == 0
+
 
 def test_redact_is_idempotent(spark):
     """Redaction tags must not themselves match any PII pattern —

@@ -279,3 +279,79 @@ def test_containment_positional_probe(spark):
         c_side, (F.col("__sid") == F.col("__sid_b")) & budget
     ).count()
     assert pruned <= plain, (pruned, plain)
+
+
+def _path_to(node, pred) -> list:
+    """Root-to-node path of physical plan nodes to the first node
+    matching ``pred`` (depth first), or [] when none matches."""
+    if pred(node):
+        return [node]
+    kids = node.children()
+    for i in range(kids.size()):
+        path = _path_to(kids.apply(i), pred)
+        if path:
+            return [node] + path
+    return []
+
+
+def test_stored_index_scan_is_bucketed_with_no_exchange(
+    spark, sf_dir, stored_indexes
+):
+    """``persist_index`` writes no sort, and the probe still reads the
+    stored prefix index as a ``Bucketed: true`` scan with no Exchange
+    between it and its join (elective broadcasts off)."""
+    from fhir2sql_spark.queries.llm import _setsim_inc_candidates
+
+    docs = _docs(spark, sf_dir)
+    bp = fz.batch_prefixes(
+        docs.where(F.col("doc_id") % 3 == 0), spark.table("t_fz_stats"),
+        1, 2, n=5,
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        cand, _ = _setsim_inc_candidates(bp, spark.table("t_fz_prefix"))
+        plan = cand._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    path = _path_to(
+        plan,
+        lambda n: n.nodeName().startswith("Scan")
+        and "t_fz_prefix" in n.toString(),
+    )
+    assert path, plan.toString()
+    scan = path[-1].toString()
+    assert "Bucketed: true" in scan, scan
+    joins = [i for i, n in enumerate(path) if "Join" in n.nodeName()]
+    below_join = [n.nodeName() for n in path[joins[-1] + 1:]]
+    assert not any("Exchange" in name for name in below_join), below_join
+
+
+def test_stored_index_probes_status_equal_registered(
+    spark, sf_dir, stored_indexes
+):
+    """Probes over the persisted (bucketed, unsorted) indexes classify
+    exactly as the registered queries do."""
+    docs = _docs(spark, sf_dir)
+    got = {
+        r["doc_id"]: r["status"]
+        for r in fz.setsim_probe(
+            docs, spark.table("t_fz_stats"), spark.table("t_fz_prefix")
+        ).collect()
+    }
+    want = {
+        r["doc_id"]: r["status"]
+        for r in registry.QUERIES["q_dedup_setsim_inc"](spark, sf_dir).collect()
+    }
+    assert got == want
+    got_mh = {
+        r["doc_id"]: r["status"]
+        for r in fz.minhash_probe(docs, spark.table("t_fz_bands")).collect()
+    }
+    want_mh = {
+        r["doc_id"]: r["status"]
+        for r in registry.QUERIES["q_dedup_minhash_inc"](spark, sf_dir).collect()
+    }
+    assert got_mh == want_mh

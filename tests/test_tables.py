@@ -9,7 +9,8 @@ The round-2 advisor flagged two defects in ``tables.load``:
    session-wide, silently turning any future nanos column in *other*
    tables into bigint.
 
-Both are fixed in ``tables._load_events``; these tests pin the fix.
+Both are fixed in ``tables._load_events``; these tests pin the fix, and
+that ``load`` infers each file version's schema only once.
 """
 
 from __future__ import annotations
@@ -62,3 +63,71 @@ def test_nanos_conf_does_not_leak(spark, tmp_path, unit):
 
 def test_load_real_events_is_ntz(spark, sf_dir):
     assert dict(load(spark, sf_dir, "events").dtypes)["ts"] == "timestamp_ntz"
+
+
+# --- schema cache: one inference per file version -------------------
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _write_region(path: str, extra: bool = False) -> None:
+    cols = {
+        "r_regionkey": pa.array([0, 1, 2], type=pa.int64()),
+        "r_name": pa.array(["AFRICA", "AMERICA", "ASIA"]),
+    }
+    if extra:
+        cols["r_extra"] = pa.array([10, 11, 12], type=pa.int32())
+    pq.write_table(pa.table(cols), path)
+
+
+def test_second_load_runs_no_spark_job(spark, tmp_path):
+    _write_region(str(tmp_path / "region.parquet"))
+    j0 = _next_job_id(spark)
+    load(spark, str(tmp_path), "region")
+    j1 = _next_job_id(spark)
+    df = load(spark, str(tmp_path), "region")
+    j2 = _next_job_id(spark)
+    assert j1 - j0 >= 1  # the first load infers the schema
+    assert j2 - j1 == 0
+    assert sorted(r["r_regionkey"] for r in df.collect()) == [0, 1, 2]
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    path = str(tmp_path / "region.parquet")
+    _write_region(path)
+    assert "r_extra" not in load(spark, str(tmp_path), "region").columns
+    _write_region(path, extra=True)
+    df = load(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_extra"]
+    assert sorted(r["r_extra"] for r in df.collect()) == [10, 11, 12]
+
+
+def test_two_loads_self_join_unambiguously(spark, sf_dir):
+    """Each load is its own relation: column references from either
+    side of a self-join resolve to that side."""
+    a = load(spark, sf_dir, "orders")
+    b = load(spark, sf_dir, "orders").where("o_orderkey % 2 = 0")
+    joined = a.join(b, a["o_orderkey"] == b["o_orderkey"], "full_outer").select(
+        a["o_orderkey"].alias("ka"), b["o_orderkey"].alias("kb")
+    )
+    rows = joined.collect()
+    keys = sorted(r["o_orderkey"] for r in a.select("o_orderkey").collect())
+    assert sorted(r["ka"] for r in rows) == keys
+    assert sorted(r["kb"] for r in rows if r["kb"] is not None) == [
+        k for k in keys if k % 2 == 0
+    ]
+    assert all(r["kb"] in (None, r["ka"]) for r in rows)
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_events_vintages_on_first_and_second_load(spark, tmp_path, unit):
+    _write_events(str(tmp_path / "events.parquet"), unit)
+    prior = spark.conf.get(CONF_KEY, None)
+    for _ in range(2):
+        df = load(spark, str(tmp_path), "events")
+        assert spark.conf.get(CONF_KEY, None) == prior
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        assert sorted((r["ts"], r["v"]) for r in df.collect()) == ROWS
+        assert spark.conf.get(CONF_KEY, None) == prior

@@ -9,7 +9,7 @@ Usage:
         [--wh /tmp/probe_wh] [--families setsim,containment,minhash] \
         [--runs 2]
 
-Methodology matches tools/measure_scale.py: fresh session per
+Methodology is SCALE.md's decade-table protocol: fresh session per
 invocation, serial, warm best-of-N, noop-sink materialization (full
 evaluation of every output column). Build times are best-of-1 (the
 write is the measurement). Output markers:
