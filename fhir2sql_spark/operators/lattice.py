@@ -25,6 +25,12 @@ computable by both engines:
   (exact), one IEEE double division, one half-away-from-zero round;
   empty cells keep their previous centroid.
 
+k-means is PQ with ONE subspace: lattice_kmeans is the per-subspace
+trainer ``_lloyd`` at ``m=1`` (same md5 seed draw, same partial-sum
+pass, same empty-cell rule), and lattice_pq_train is ``_lloyd`` at
+``m`` subspaces. Every nearest-codeword step — training, IVF
+assignment, PQ encoding — is the one argmin ``_nearest``.
+
 Because each step is exact, R unrolled Lloyd rounds are replayable as
 MATERIALIZED CTEs (the q_graph_pagerank unroll technique,
 queries/training.py) and the full train -> search pipeline gets a
@@ -48,6 +54,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from fhir2sql_spark.sources.arrow_rows import arrow_frame
 
 # Exactness guard (ADVICE r6: the old flat |q| <= 3e6 bound was NOT
 # dim-aware — at dim=1024 it admitted dim*q^2 = 9.2e15 > 2^53 and a
@@ -151,6 +159,19 @@ def _d2_int(X, C):
     return d2.astype(np.int64)
 
 
+def _nearest(x, code):
+    """(idx, d2): the nearest row of ``code`` for each int64 row of
+    ``x`` and the exact squared L2 to it. Ties break to the lowest
+    index (np.argmin's first minimum); every codebook is held in id
+    order, so that is the lowest cent_id / code_id — the oracles'
+    ``ORDER BY d2, cent_id``."""
+    import numpy as np
+
+    d2 = _d2_int(x, code)
+    idx = np.argmin(d2, axis=1)
+    return idx, d2[np.arange(len(idx)), idx]
+
+
 def _merge_partials(stats: DataFrame, keys: list) -> DataFrame:
     """Distributed merge of per-batch trainer partials to one row per
     key (VERDICT r11 #1): sum the counts, element-wise-sum the int64
@@ -178,109 +199,166 @@ def _merge_partials(stats: DataFrame, keys: list) -> DataFrame:
     )
 
 
-def lattice_kmeans(
-    qv: DataFrame, k: int = 16, iters: int = 2
-) -> DataFrame:
-    """Deterministic PORTABLE Lloyd's k-means over the integer lattice.
-    ``qv`` is quantize()'s output. Returns (cent_id int, cv
-    array<long>). Exactly replayable as ``iters`` unrolled SQL rounds
-    (see queries/llm.py _lattice_sql)."""
+def _lloyd(qv: DataFrame, m: int, n_codes: int, iters: int):
+    """Portable Lloyd's over ``m`` subspaces of quantize()'s output,
+    all trained in the SAME per-round corpus pass. Returns the
+    (m, k', dim/m) int64 books, k' = min(n_codes, |qv|): the
+    md5-ordered first-k' seed draw sliced per subspace (so the SQL
+    replays share one seed CTE), then ``iters`` rounds of
+    assign -> per-(s, code) integer partial sums -> exact mean, empty
+    cells keeping their previous codeword."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     import numpy as np
     import pandas as pd
 
-    spark = qv.sparkSession
-    sc = spark.sparkContext
-    cents = _seed_codebook(qv, k)
+    seed = np.stack([v for _, v in _seed_codebook(qv, n_codes)])
+    k, dim = seed.shape
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    # books[s, c] = codeword c of subspace s
+    books = seed.reshape(k, m, sub).transpose(1, 0, 2).copy()
+    sc = qv.sparkSession.sparkContext
     base = qv.localCheckpoint(eager=False)
 
     for _ in range(iters):
-        cids = np.array([c for c, _ in cents], dtype=np.int64)
-        code = np.stack([v for _, v in cents])
-        bc = sc.broadcast((cids, code))
+        bc = sc.broadcast(books)
 
-        # per-batch integer partial sums (k x dim per Arrow batch);
-        # merged per cell distributively below so the driver only
-        # ever sees <= k rows
+        # per-batch integer partial sums (m * k' x sub per Arrow batch)
+        # keyed by the flat cell s * k' + code; merged per (s, code)
+        # distributively below so the driver only ever sees <= m * k'
+        # rows
         def stats_batches(it, _bc=bc):
-            b_cids, b_code = _bc.value
-            k_now, dim_now = b_code.shape
+            bks = _bc.value
+            m_now, k_now, sub_now = bks.shape
             for pdf in it:
                 if not len(pdf):
                     continue
                 x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-                _check_domain(x)
-                idx = np.argmin(_d2_int(x, b_code), axis=1)
-                sums = np.zeros((k_now, dim_now), dtype=np.int64)
-                np.add.at(sums, idx, x)
-                counts = np.bincount(idx, minlength=k_now)
+                xs = x.reshape(len(x), m_now, sub_now).transpose(1, 0, 2)
+                cell = np.concatenate(
+                    [_nearest(xs[s], bks[s])[0] + s * k_now for s in range(m_now)]
+                )
+                sums = np.zeros((m_now * k_now, sub_now), dtype=np.int64)
+                np.add.at(sums, cell, xs.reshape(-1, sub_now))
+                counts = np.bincount(cell, minlength=m_now * k_now)
                 nz = np.nonzero(counts)[0]
                 yield pd.DataFrame(
                     {
-                        "cell": b_cids[nz].astype("int32"),
+                        "s": (nz // k_now).astype("int32"),
+                        "code": (nz % k_now).astype("int32"),
                         "cnt": counts[nz].astype("int64"),
-                        "vsum": [list(s) for s in sums[nz]],
+                        "vsum": list(sums[nz]),
                     }
                 )
 
         stats = base.select("qv").mapInPandas(
-            stats_batches, "cell int, cnt long, vsum array<long>"
+            stats_batches, "s int, code int, cnt long, vsum array<long>"
         )
 
         # One distributed partial-merge before the collect (VERDICT
-        # r11 #1): the per-batch partials are k x n_partitions rows,
-        # and n_partitions is unbounded at 100 TB — collecting them
-        # raw was a driver-side materialization that grows with input
-        # size. groupBy(cell) merges them to <= k rows (exact: int64
-        # element-wise sums are order-free) through ONE tiny shuffle,
-        # so the driver collect is codebook-bounded at any scale.
-        # JVM-side fold (collect_list + zip_with aggregate) rather
-        # than applyInPandas: the interpreted HOF runs over <= k rows
-        # of partials, and skipping the grouped-map Python stage
-        # saves a worker round-trip per Lloyd round (measured ~0.5 s
-        # per query at sf0.1).
-        merged = _merge_partials(stats, ["cell"])
-        # ROUND(SUM/COUNT) on the driver over <= k rows:
-        # integer sums are order-free; the division
-        # is the same single IEEE double op as the SQL form; the round
-        # is half-away-from-zero. Decimal(float) is the EXACT binary
-        # expansion, and at scale 0 every .5 boundary is an exactly
-        # representable double, so ROUND_HALF_UP here is bit-identical
-        # to Spark's ROUND(double, 0) and DuckDB's ROUND.
-        from decimal import ROUND_HALF_UP, Decimal
-
-        sums: dict[int, "np.ndarray"] = {}
-        counts: dict[int, int] = {}
-        for r in merged.collect():
-            c = r["cell"]
-            v = np.asarray(r["vsum"], dtype=np.int64)
-            if c in sums:
-                sums[c] += v
-                counts[c] += r["cnt"]
-            else:
-                sums[c] = v.copy()
-                counts[c] = r["cnt"]
-        new_rows = {
-            c: [
+        # r11 #1): the per-batch partials are m * k' x n_partitions
+        # rows, and n_partitions is unbounded at 100 TB — collecting
+        # them raw was a driver-side materialization that grows with
+        # input size. groupBy(s, code) merges them to <= m * k' rows
+        # through ONE tiny shuffle, so the driver collect is
+        # codebook-bounded at any scale.
+        # ROUND(SUM/COUNT) on the driver over those rows: integer sums
+        # are order-free; the division is the same single IEEE double
+        # op as the SQL form; the round is half-away-from-zero.
+        # Decimal(float) is the EXACT binary expansion, and at scale 0
+        # every .5 boundary is an exactly representable double, so
+        # ROUND_HALF_UP here is bit-identical to Spark's
+        # ROUND(double, 0) and DuckDB's ROUND.
+        books = books.copy()
+        for r in _merge_partials(stats, ["s", "code"]).collect():
+            books[r["s"], r["code"]] = [
                 int(
-                    Decimal(float(s) / counts[c]).quantize(
+                    Decimal(float(v) / r["cnt"]).quantize(
                         Decimal(1), rounding=ROUND_HALF_UP
                     )
                 )
-                for s in sums[c]
+                for v in r["vsum"]
             ]
-            for c in sums
-        }
-        cents = [
-            (cid, np.array(new_rows[cid], dtype=np.int64))
-            if cid in new_rows
-            else (cid, vec)  # empty cell keeps its centroid
-            for cid, vec in cents
-        ]
         bc.unpersist(False)
 
-    return spark.createDataFrame(
-        [(int(c), [int(x) for x in v]) for c, v in cents],
+    return books
+
+
+def lattice_kmeans(
+    qv: DataFrame, k: int = 16, iters: int = 2
+) -> DataFrame:
+    """Deterministic PORTABLE Lloyd's k-means over the integer lattice:
+    ``_lloyd`` with one subspace. ``qv`` is quantize()'s output.
+    Returns (cent_id int, cv array<long>), min(k, |qv|) rows. Exactly
+    replayable as ``iters`` unrolled SQL rounds (see queries/llm.py
+    _lattice_prologue)."""
+    (cv,) = _lloyd(qv, 1, k, iters)
+    return arrow_frame(
+        qv.sparkSession,
         "cent_id int, cv array<long>",
+        [(list(range(len(cv))), cv.tolist())],
+    )
+
+
+def lattice_pq_train(
+    qv: DataFrame, m: int = 4, n_codes: int = 16, iters: int = 2
+) -> DataFrame:
+    """Per-subspace portable Lloyd: ``_lloyd`` with ``m`` subspaces,
+    replayed by queries/llm.py _pq_trained_oracle. Returns
+    (s int, code_id int, w array<long>), m * min(n_codes, |qv|)
+    rows."""
+    import numpy as np
+
+    books = _lloyd(qv, m, n_codes, iters)
+    _, k, sub = books.shape
+    s, code = np.divmod(np.arange(m * k), k)
+    return arrow_frame(
+        qv.sparkSession,
+        "s int, code_id int, w array<long>",
+        [(s.tolist(), code.tolist(), books.reshape(m * k, sub).tolist())],
+    )
+
+
+def _collect_codebook(cents: DataFrame):
+    """(code (k,dim) int64, cids (k,) int64) from a lattice codebook —
+    the bounded k-row collect every search/assign pass shares. Rows
+    are in cent_id order, which _nearest's tie rule relies on."""
+    import numpy as np
+
+    rows = cents.orderBy("cent_id").collect()
+    code = np.stack([np.array(r["cv"], dtype=np.int64) for r in rows])
+    cids = np.array([r["cent_id"] for r in rows], dtype=np.int64)
+    return code, cids
+
+
+def _assign_cells(df: DataFrame, code, cids) -> DataFrame:
+    """Map-side nearest-centroid assignment against the codebook
+    (exact int L2, ties -> lowest cent_id). ``df`` is a quantize()
+    output; returns (vec_id, cell int, d2 long, qv) with d2 the exact
+    squared L2 to the winning centroid — the corpus never shuffles.
+    Every assignment pass is this one kernel; callers rename."""
+    import numpy as np
+    import pandas as pd
+
+    def assign(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            x = np.array(pdf["qv"].tolist(), dtype=np.int64)
+            idx, d2 = _nearest(x, code)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vid"].to_numpy(dtype=np.int64),
+                    "cell": cids[idx].astype("int32"),
+                    "d2": d2,
+                    "qv": pdf["qv"],
+                }
+            )
+
+    return df.select("vid", "qv").mapInPandas(
+        assign, "vec_id long, cell int, d2 long, qv array<long>"
     )
 
 
@@ -288,35 +366,12 @@ def lattice_assign(qv: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment against a (frozen) lattice codebook:
     (vid, cell int, d2 long) with the EXACT integer squared L2 to the
     winning centroid — ties break to the lowest cent_id, matching the
-    oracle's ``ORDER BY d2, cent_id``. One fused Arrow pass against the
-    broadcast codebook; the corpus never shuffles. Shared by the
-    prototype-pruning and codebook-drift queries (and mirrors the
-    assignment step inside lattice_kmeans/lattice_ivf_topk)."""
-    import numpy as np
-    import pandas as pd
-
-    cent_rows = cents.orderBy("cent_id").collect()
-    code = np.stack([np.array(r["cv"], dtype=np.int64) for r in cent_rows])
-    cids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
-
-    def assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            _check_domain(x)
-            d2 = _d2_int(x, code)
-            idx = np.argmin(d2, axis=1)  # ties -> lowest index = lowest cent_id
-            yield pd.DataFrame(
-                {
-                    "vid": pdf["vid"].to_numpy(dtype=np.int64),
-                    "cell": cids[idx].astype("int32"),
-                    "d2": d2[np.arange(len(idx)), idx].astype("int64"),
-                }
-            )
-
-    return qv.select("vid", "qv").mapInPandas(
-        assign, "vid long, cell int, d2 long"
+    oracle's ``ORDER BY d2, cent_id``. The _assign_cells pass that
+    IVF search and SemDeDup share; used by the prototype-pruning and
+    codebook-drift queries."""
+    code, cids = _collect_codebook(cents)
+    return _assign_cells(qv, code, cids).select(
+        F.col("vec_id").alias("vid"), "cell", "d2"
     )
 
 
@@ -337,56 +392,30 @@ def lattice_ivf_topk(
     assignment vs the broadcast codebook, the tiny query side
     broadcasts into the cell equi-join — the corpus never shuffles."""
     import numpy as np
-    import pandas as pd
 
-    cent_rows = cents.orderBy("cent_id").collect()
-    code = np.stack(
-        [np.array(r["cv"], dtype=np.int64) for r in cent_rows]
-    )
-    cids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
+    code, cids = _collect_codebook(cents)
+    spark = corpus.sparkSession
     q_rows = queries.select("vid", "qv").collect()
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
+        return spark.createDataFrame(
             [], "q_id long, c_id long, adist long, rn int"
         )
     q_ids = np.array([r["vid"] for r in q_rows], dtype=np.int64)
     qm = np.array([r["qv"] for r in q_rows], dtype=np.int64)
-    _check_domain(qm)
     qd = _d2_int(qm, code)
     # n_probe nearest cells per query (ties -> lowest cent_id via
     # stable lexsort, matching the oracle's ORDER BY d2, cent_id)
-    probe_rows = []
-    for qi in range(len(q_ids)):
-        order = np.lexsort((cids, qd[qi]))[:n_probe]
-        for c in order:
-            probe_rows.append((int(q_ids[qi]), int(cids[c])))
-    spark = corpus.sparkSession
-    probes = spark.createDataFrame(probe_rows, "q_id long, cell int")
-
-    def assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            _check_domain(x)
-            idx = np.argmin(_d2_int(x, code), axis=1)
-            yield pd.DataFrame(
-                {
-                    "c_id": pdf["vid"].to_numpy(dtype=np.int64),
-                    "cell": cids[idx].astype("int32"),
-                    "cqv": pdf["qv"],
-                }
-            )
-
-    assigned = corpus.mapInPandas(
-        assign, "c_id long, cell int, cqv array<long>"
+    near = np.lexsort((np.broadcast_to(cids, qd.shape), qd))[:, :n_probe]
+    probes = arrow_frame(
+        spark,
+        "q_id long, cell int",
+        [(np.repeat(q_ids, near.shape[1]).tolist(), cids[near].ravel().tolist())],
     )
-    qdf = spark.createDataFrame(
-        [
-            (int(q_ids[i]), [int(v) for v in qm[i]])
-            for i in range(len(q_ids))
-        ],
-        "q_id long, qqv array<long>",
+    qdf = arrow_frame(
+        spark, "q_id long, qqv array<long>", [(q_ids.tolist(), qm.tolist())]
+    )
+    assigned = _assign_cells(corpus, code, cids).select(
+        F.col("vec_id").alias("c_id"), "cell", F.col("qv").alias("cqv")
     )
     cand = assigned.join(F.broadcast(probes), "cell").where(
         F.col("c_id") != F.col("q_id")
@@ -409,125 +438,6 @@ def lattice_ivf_topk(
     )
 
 
-def lattice_pq_train(
-    qv: DataFrame, m: int = 4, n_codes: int = 16, iters: int = 2
-) -> DataFrame:
-    """Per-subspace portable Lloyd: the PQ analogue of lattice_kmeans.
-    All ``m`` subspaces train in the SAME per-round corpus pass
-    (partial sums keyed (s, code)); the seed codebook is the one
-    md5-ordered first-``n_codes`` draw sliced per subspace, so the SQL
-    replay shares lattice_kmeans' seed CTE. Returns
-    (s int, code_id int, w array<long>)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = qv.sparkSession
-    sc = spark.sparkContext
-    seed = _seed_codebook(qv, n_codes)
-    dim = len(seed[0][1])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    # books[s][c] = codeword c of subspace s
-    books = [
-        np.stack([v[s * sub : (s + 1) * sub] for _, v in seed])
-        for s in range(m)
-    ]
-    base = qv.localCheckpoint(eager=False)
-
-    for _ in range(iters):
-        bc = sc.broadcast(np.stack(books))  # (m, n_codes, sub)
-
-        def stats_batches(it, _bc=bc):
-            bks = _bc.value
-            m_now, k_now, sub_now = bks.shape
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-                _check_domain(x)
-                out_s, out_c, out_cnt, out_sum = [], [], [], []
-                for s in range(m_now):
-                    xs = x[:, s * sub_now : (s + 1) * sub_now]
-                    idx = np.argmin(_d2_int(xs, bks[s]), axis=1)
-                    sums = np.zeros((k_now, sub_now), dtype=np.int64)
-                    np.add.at(sums, idx, xs)
-                    counts = np.bincount(idx, minlength=k_now)
-                    nz = np.nonzero(counts)[0]
-                    out_s.extend([s] * len(nz))
-                    out_c.extend(nz.tolist())
-                    out_cnt.extend(counts[nz].tolist())
-                    out_sum.extend([list(v) for v in sums[nz]])
-                yield pd.DataFrame(
-                    {
-                        "s": pd.Series(out_s, dtype="int32"),
-                        "code": pd.Series(out_c, dtype="int32"),
-                        "cnt": pd.Series(out_cnt, dtype="int64"),
-                        "vsum": out_sum,
-                    }
-                )
-
-        stats = base.select("qv").mapInPandas(
-            stats_batches, "s int, code int, cnt long, vsum array<long>"
-        )
-
-        # distributed partial-merge to <= m * n_codes rows before the
-        # collect (VERDICT r11 #1 — the raw partials are
-        # m * n_codes * n_partitions rows, unbounded at 100 TB); one
-        # tiny shuffle, exact order-free int64 sums, JVM-side fold
-        # (see lattice_kmeans)
-        merged = _merge_partials(stats, ["s", "code"])
-        # fold means on the driver over the codebook-bounded rows —
-        # same exactness argument as lattice_kmeans (order-free int64
-        # sums, one IEEE division, HALF_UP round bit-identical at
-        # scale 0)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        sums: dict[tuple, "np.ndarray"] = {}
-        counts: dict[tuple, int] = {}
-        for r in merged.collect():
-            key = (r["s"], r["code"])
-            v = np.asarray(r["vsum"], dtype=np.int64)
-            if key in sums:
-                sums[key] += v
-                counts[key] += r["cnt"]
-            else:
-                sums[key] = v.copy()
-                counts[key] = r["cnt"]
-        new_rows = {
-            key: [
-                int(
-                    Decimal(float(sv) / counts[key]).quantize(
-                        Decimal(1), rounding=ROUND_HALF_UP
-                    )
-                )
-                for sv in sums[key]
-            ]
-            for key in sums
-        }
-        books = [
-            np.stack(
-                [
-                    np.array(new_rows[(s, c)], dtype=np.int64)
-                    if (s, c) in new_rows
-                    else books[s][c]
-                    for c in range(n_codes)
-                ]
-            )
-            for s in range(m)
-        ]
-        bc.unpersist(False)
-
-    return spark.createDataFrame(
-        [
-            (s, c, [int(x) for x in books[s][c]])
-            for s in range(m)
-            for c in range(n_codes)
-        ],
-        "s int, code_id int, w array<long>",
-    )
-
-
 def lattice_pq_search(
     queries: DataFrame,
     corpus: DataFrame,
@@ -537,7 +447,7 @@ def lattice_pq_search(
 ) -> DataFrame:
     """ADC over trained lattice codebooks — operators/pq.py pq_search's
     fused encode+score mapInPandas shape with EXACT integer distances:
-    encode each corpus vector per subspace (argmin, ties -> lowest
+    encode each corpus vector per subspace (_nearest, ties -> lowest
     code), score queries via the integer LUT, emit per-batch top-k.
     Returns (q_id, c_id, adist long, rn)."""
     import numpy as np
@@ -567,7 +477,6 @@ def lattice_pq_search(
         raise ValueError(
             f"lattice_pq_search: query dim {qm.shape[1]} != codebook dim {dim}"
         )
-    _check_domain(qm)
     # integer LUT[qi, s, j]
     lut = np.stack(
         [_d2_int(qm[:, s * sub : (s + 1) * sub], bks[s]) for s in range(m)],
@@ -584,15 +493,10 @@ def lattice_pq_search(
                 raise ValueError(
                     f"lattice_pq_search: corpus dim {X.shape[1]} != {dim}"
                 )
-            _check_domain(X)
-            codes = np.empty((len(ids), m), dtype=np.int64)
-            for s in range(m):
-                codes[:, s] = np.argmin(
-                    _d2_int(X[:, s * sub : (s + 1) * sub], bks[s]), axis=1
-                )
             adist = np.zeros((len(ids), len(q_ids)), dtype=np.int64)
             for s in range(m):
-                adist += lut[:, s, codes[:, s]].T
+                code, _ = _nearest(X[:, s * sub : (s + 1) * sub], bks[s])
+                adist += lut[:, s, code].T
             for qi, qid in enumerate(q_ids):
                 mask = ids != qid
                 cand_ids, cand_d = ids[mask], adist[mask, qi]
@@ -616,17 +520,6 @@ def lattice_pq_search(
         .where(F.col("rn") <= k)
         .select("q_id", "c_id", "adist", "rn")
     )
-
-
-def _gram_int(x):
-    """Exact int64 Gram matrix + squared norms of int64 rows ``x``
-    (guarded float64 BLAS — every partial sum an integer < 2^53)."""
-    import numpy as np
-
-    _check_domain(x)
-    xf = x.astype(np.float64)
-    dot = (xf @ xf.T).astype(np.int64)
-    return dot, np.diag(dot).copy()
 
 
 def _rational_cos_mask(dot, n2, num2: int, den2: int):
@@ -653,6 +546,23 @@ def _rational_cos_mask(dot, n2, num2: int, den2: int):
     return sim
 
 
+def _cell_cosine(pdf, num2: int, den2: int):
+    """One cell's (vec_id, qv) rows sorted by vec_id: returns
+    (order, sorted ids, sim) with ``sim`` the exact rational-cosine
+    mask between them. The Gram matrix is guarded float64 BLAS — every
+    partial sum an integer < 2^53."""
+    import numpy as np
+
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    order = np.argsort(ids)
+    x = np.array(pdf["qv"].tolist(), dtype=np.int64)[order]
+    _check_domain(x)
+    xf = x.astype(np.float64)
+    dot = (xf @ xf.T).astype(np.int64)
+    sim = _rational_cos_mask(dot, np.diag(dot).copy(), num2, den2)
+    return order, ids[order], sim
+
+
 def lattice_semantic_dedup(
     corpus: DataFrame,
     cents: DataFrame,
@@ -660,9 +570,9 @@ def lattice_semantic_dedup(
     tau_den: int = 5,
 ) -> DataFrame:
     """SemDeDup over the lattice with an EXACT rational-cosine
-    predicate: vector b (within a's trained cell) marks a... rather,
-    every vector with a same-cell smaller-id neighbour at
-    cos >= tau_num/tau_den is a duplicate. The cosine test is done in
+    predicate: every vector with a same-cell smaller-id neighbour at
+    cos >= tau_num/tau_den is a duplicate (the smallest id of each
+    near-duplicate group is kept). The cosine test is done in
     integer arithmetic — ``dot > 0 AND den^2*dot^2 >= num^2*|a|^2*|b|^2``
     (zero-norm vectors never match: cosine undefined) — so both
     engines agree bit-exactly with NO float threshold margin argument.
@@ -673,86 +583,27 @@ def lattice_semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    cent_rows = cents.orderBy("cent_id").collect()
-    code = np.stack([np.array(r["cv"], dtype=np.int64) for r in cent_rows])
-    cids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
-
-    def assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            _check_domain(x)
-            idx = np.argmin(_d2_int(x, code), axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vid"].to_numpy(dtype=np.int64),
-                    "cell": cids[idx].astype("int32"),
-                    "qv": pdf["qv"],
-                }
-            )
-
-    assigned = corpus.mapInPandas(assign, "vec_id long, cell int, qv array<long>")
+    code, cids = _collect_codebook(cents)
     num2 = int(tau_num) ** 2
     den2 = int(tau_den) ** 2
 
     def per_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-        order = np.argsort(ids)
-        ids, x = ids[order], x[order]
-        dot, n2 = _gram_int(x)
+        _, ids, sim = _cell_cosine(pdf, num2, den2)
         # b is a dup if any a<b (by id) in the cell passes the test
-        sim = _rational_cos_mask(dot, n2, num2, den2)
-        lower = np.tril(np.ones_like(sim, dtype=bool), k=-1)
-        is_dup = (sim & lower).any(axis=1)
         return pd.DataFrame(
             {
                 "vec_id": ids,
                 "cell": pdf["cell"].iloc[0],
-                "is_dup": is_dup,
+                "is_dup": np.tril(sim, -1).any(axis=1),
             }
         )
 
-    return assigned.groupBy("cell").applyInPandas(
-        per_cell, "vec_id long, cell int, is_dup boolean"
+    return (
+        _assign_cells(corpus, code, cids)
+        .drop("d2")
+        .groupBy("cell")
+        .applyInPandas(per_cell, "vec_id long, cell int, is_dup boolean")
     )
-
-
-def _collect_codebook(cents: DataFrame):
-    """(code (k,dim) int64, cids (k,) int64) from a lattice codebook —
-    the bounded k-row collect every search/assign pass shares."""
-    import numpy as np
-
-    rows = cents.orderBy("cent_id").collect()
-    code = np.stack([np.array(r["cv"], dtype=np.int64) for r in rows])
-    cids = np.array([r["cent_id"] for r in rows], dtype=np.int64)
-    return code, cids
-
-
-def _assign_cells(df: DataFrame, code, cids) -> DataFrame:
-    """Map-side nearest-centroid assignment against the broadcast
-    codebook (exact int L2, ties -> lowest cent_id). ``df`` is a
-    quantize() output; returns (vec_id, cell, qv) — the corpus never
-    shuffles."""
-    import numpy as np
-    import pandas as pd
-
-    def assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            idx = np.argmin(_d2_int(x, code), axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vid"].to_numpy(dtype=np.int64),
-                    "cell": cids[idx].astype("int32"),
-                    "qv": pdf["qv"],
-                }
-            )
-
-    return df.mapInPandas(assign, "vec_id long, cell int, qv array<long>")
 
 
 def lattice_semantic_dedup_incremental(
@@ -788,8 +639,8 @@ def lattice_semantic_dedup_incremental(
     import pandas as pd
 
     code, cids = _collect_codebook(cents)
-    new_asg = _assign_cells(new, code, cids)
-    base_asg = _assign_cells(base, code, cids)
+    new_asg = _assign_cells(new, code, cids).drop("d2")
+    base_asg = _assign_cells(base, code, cids).drop("d2")
     touched = new_asg.select("cell").distinct()
     base_pruned = base_asg.join(F.broadcast(touched), "cell", "left_semi")
     both = base_pruned.withColumn("is_new", F.lit(False)).unionByName(
@@ -799,20 +650,15 @@ def lattice_semantic_dedup_incremental(
     den2 = int(tau_den) ** 2
 
     def per_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        order = np.argsort(pdf["vec_id"].to_numpy(dtype=np.int64))
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
+        order, ids, sim = _cell_cosine(pdf, num2, den2)
         is_new = pdf["is_new"].to_numpy(dtype=bool)[order]
-        x = np.array(pdf["qv"].tolist(), dtype=np.int64)[order]
-        dot, n2 = _gram_int(x)
-        sim = _rational_cos_mask(dot, n2, num2, den2)
         new_idx = np.where(is_new)[0]
         if not len(new_idx):
             return pd.DataFrame(
                 {"vec_id": [], "cell": [], "status": []}
             ).astype({"vec_id": "int64", "cell": "int32", "status": "str"})
         base_any = sim[np.ix_(new_idx, np.where(~is_new)[0])].any(axis=1)
-        sim_nn = sim[np.ix_(new_idx, new_idx)]
-        batch_any = (sim_nn & np.tril(np.ones_like(sim_nn), k=-1)).any(axis=1)
+        batch_any = np.tril(sim[np.ix_(new_idx, new_idx)], -1).any(axis=1)
         return pd.DataFrame(
             {
                 "vec_id": ids[new_idx],

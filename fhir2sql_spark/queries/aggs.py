@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.registry import query
+from fhir2sql_spark.sources.arrow_rows import arrow_frame
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import dec, exact_div
 
@@ -382,10 +383,11 @@ def q_agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             abs(jac_est - jac_exact) <= 0.25,
         )
     ]
-    return spark.createDataFrame(
-        row,
+    return arrow_frame(
+        spark,
         "n_a long, n_b long, n_intersect long, est_a_ok boolean, "
         "est_b_ok boolean, intersect_ok boolean, jaccard_ok boolean",
+        [list(zip(*row))],
     )
 
 

@@ -45,6 +45,7 @@ from fhir2sql_spark.operators.text import (
 )
 from fhir2sql_spark.queries.retrieval import _md5_60
 from fhir2sql_spark.registry import query
+from fhir2sql_spark.sources.arrow_rows import arrow_frame
 from fhir2sql_spark.tables import load
 
 
@@ -698,9 +699,9 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         sel.append((r, row["vid"], list(row["qv"]), row["mind"]))
-    return spark.createDataFrame(
-        [(r, int(v), int(d)) for r, v, _, d in sel],
-        "rank int, vec_id long, d2prev long",
+    rank, vec_id, _, d2prev = zip(*sel)
+    return arrow_frame(
+        spark, "rank int, vec_id long, d2prev long", [(rank, vec_id, d2prev)]
     )
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators.packing import distributed_prefix_sum
 from fhir2sql_spark.registry import query
+from fhir2sql_spark.sources.arrow_rows import arrow_frame
 from fhir2sql_spark.tables import load
 
 
@@ -524,10 +525,11 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("w"),
                 "cnt",
             )
-    return spark.createDataFrame(
-        rows,
+    return arrow_frame(
+        spark,
         "rnd int, left_sym string, right_sym string, merged string, "
         "pair_freq long",
+        [list(zip(*rows))] if rows else [],
     )
 
 

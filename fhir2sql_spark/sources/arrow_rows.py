@@ -23,13 +23,16 @@ from pyspark.sql.types import StructType
 
 def arrow_frame(
     spark: SparkSession,
-    schema: StructType,
+    schema: StructType | str,
     column_batches: Iterable[Sequence[Sequence]],
 ) -> DataFrame:
-    """A DataFrame of ``schema`` from batches of columns (one list of
-    values per field). Batches are converted to Arrow as the iterable
-    yields them, so a generator never holds more than one batch as
-    Python objects; no batches gives an empty frame of ``schema``."""
+    """A DataFrame of ``schema`` (a StructType or a DDL string) from
+    batches of columns (one list of values per field). Batches are
+    converted to Arrow as the iterable yields them, so a generator
+    never holds more than one batch as Python objects; no batches
+    gives an empty frame of ``schema``."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     table = pa.Table.from_batches(
         (pa.record_batch(list(cols), schema=arrow_schema) for cols in column_batches),

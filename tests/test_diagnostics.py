@@ -1,66 +1,19 @@
-"""Pipeline-diagnostics queries (queries/diagnostics.py, round 8) and
-the shared lattice_assign operator. Exact end-to-end parity runs in
-test_oracle_parity/drivercheck; these pin the operator invariants the
-oracles rely on: assignment tie rules, count conservation, and the
-integer form of the decision predicates."""
+"""Pipeline-diagnostics queries (queries/diagnostics.py, round 8).
+Exact end-to-end parity runs in test_oracle_parity/drivercheck; these
+pin the invariants the oracles rely on: count conservation and the
+integer form of the decision predicates. The lattice_assign operator
+they share is tested in tests/test_lattice.py."""
 
 from __future__ import annotations
 
 import pytest
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from fhir2sql_spark import registry
-from fhir2sql_spark.operators import lattice
 from fhir2sql_spark.tables import load
 
 registry.load_all()
-
-
-def test_lattice_assign_matches_numpy_argmin(spark):
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(40, 6)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    qv = lattice.quantize(df)
-    cents = lattice.lattice_kmeans(qv, k=4, iters=1)
-    got = {
-        r["vid"]: (r["cell"], r["d2"])
-        for r in lattice.lattice_assign(qv, cents).collect()
-    }
-    code = np.stack(
-        [
-            np.array(r["cv"], dtype=np.int64)
-            for r in cents.orderBy("cent_id").collect()
-        ]
-    )
-    q = np.array(
-        [r["qv"] for r in qv.orderBy("vid").collect()], dtype=np.int64
-    )
-    d2 = (
-        (q * q).sum(1)[:, None]
-        - 2 * q @ code.T
-        + (code * code).sum(1)[None, :]
-    )
-    for i in range(len(q)):
-        cell = int(np.argmin(d2[i]))  # ties -> lowest cent_id
-        assert got[i] == (cell, int(d2[i][cell]))
-
-
-def test_lattice_assign_tie_breaks_to_lowest_cent(spark):
-    # two IDENTICAL centroids: every vector is equidistant from both,
-    # so the winner must always be cent_id 0
-    qv = spark.createDataFrame(
-        [(i, [i, i + 1]) for i in range(5)], "vid long, qv array<long>"
-    )
-    cents = spark.createDataFrame(
-        [(0, [2, 2]), (1, [2, 2])], "cent_id int, cv array<long>"
-    )
-    rows = lattice.lattice_assign(qv, cents).collect()
-    assert {r["cell"] for r in rows} == {0}
 
 
 def test_skew_profile_invariants(spark, sf_dir):

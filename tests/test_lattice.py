@@ -107,6 +107,51 @@ def test_lattice_kmeans_empty_cell_keeps_centroid(spark):
     assert all(tuple(r["cv"]) == (100, 100) for r in out)
 
 
+def test_lattice_assign_matches_numpy_argmin(spark):
+    rng = np.random.RandomState(7)
+    vecs = rng.randn(40, 6)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    qv = lattice.quantize(df)
+    cents = lattice.lattice_kmeans(qv, k=4, iters=1)
+    got = {
+        r["vid"]: (r["cell"], r["d2"])
+        for r in lattice.lattice_assign(qv, cents).collect()
+    }
+    code = np.stack(
+        [
+            np.array(r["cv"], dtype=np.int64)
+            for r in cents.orderBy("cent_id").collect()
+        ]
+    )
+    q = np.array(
+        [r["qv"] for r in qv.orderBy("vid").collect()], dtype=np.int64
+    )
+    d2 = (
+        (q * q).sum(1)[:, None]
+        - 2 * q @ code.T
+        + (code * code).sum(1)[None, :]
+    )
+    for i in range(len(q)):
+        cell = int(np.argmin(d2[i]))  # ties -> lowest cent_id
+        assert got[i] == (cell, int(d2[i][cell]))
+
+
+def test_lattice_assign_tie_breaks_to_lowest_cent(spark):
+    # two IDENTICAL centroids: every vector is equidistant from both,
+    # so the winner must always be cent_id 0
+    qv = spark.createDataFrame(
+        [(i, [i, i + 1]) for i in range(5)], "vid long, qv array<long>"
+    )
+    cents = spark.createDataFrame(
+        [(0, [2, 2]), (1, [2, 2])], "cent_id int, cv array<long>"
+    )
+    rows = lattice.lattice_assign(qv, cents).collect()
+    assert {r["cell"] for r in rows} == {0}
+
+
 def test_lattice_ivf_topk_matches_bruteforce(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").limit(200)
     qv = lattice.quantize(emb)
@@ -139,6 +184,25 @@ def test_lattice_pq_search_dim_guard(spark):
         lattice.lattice_pq_search(
             lattice.quantize(bad_q), qv, books, k=2, m=2
         ).collect()
+
+
+def test_lattice_pq_train_fewer_vectors_than_codes(spark):
+    """Like lattice_kmeans, the PQ trainer trains min(n_codes, |qv|)
+    codes per subspace, and the search runs over those books: with
+    every vector its own codeword, ADC is the exact squared L2."""
+    vecs = np.random.RandomState(4).randn(3, 8) * 0.2
+    qv = lattice.quantize(_mk(spark, vecs))
+    books = lattice.lattice_pq_train(qv, m=2, n_codes=16, iters=2)
+    rows = books.collect()
+    assert len(rows) == 6
+    assert {(r["s"], r["code_id"]) for r in rows} == {
+        (s, c) for s in range(2) for c in range(3)
+    }
+    out = lattice.lattice_pq_search(qv, qv, books, k=2, m=2).collect()
+    assert len(out) == 6  # 3 queries x 2 other vectors
+    X = _quantize_np(np.array(vecs, dtype=np.float32).astype(np.float64))
+    for r in out:
+        assert r["adist"] == int(((X[r["q_id"]] - X[r["c_id"]]) ** 2).sum())
 
 
 def test_lattice_pq_books_shape_and_adc_exact(spark):
