@@ -15,10 +15,15 @@ Spark-first re-expression, two tiers:
    the reference's bounded retry (src/db_utils.rs:35-59).
 
 2. ``BundleFileDataSource``: a Spark 4 Python DataSource reading a
-   directory of bundle-JSON files with one partition per file —
-   pagination parallelized across executors (the reference fetches
-   pages strictly serially; a real FHIR server exposes page offsets,
-   so partition-per-page is the 100 TB shape).
+   directory of bundle-JSON files. The batch reader packs the sorted
+   files into consecutive partitions of up to ``PARTITION_BYTES``
+   (Spark's default ``spark.sql.files.maxPartitionBytes``), as Spark's
+   own file sources do: each partition is one Python worker task, and
+   a task costs about 0.27 CPU-s to start whatever its row count
+   (SCALE.md, "Cost of one Python worker task"), so one task per
+   200-resource page spent more on start-up than on parsing. Large
+   page sets still spread over many tasks (the reference fetches
+   pages strictly serially).
 
 Row-level tolerance mirrors the reference: malformed resources are
 skipped, never fatal (src/main.rs:210-225); a page without ``entry``
@@ -36,6 +41,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from fhir2sql_spark.sources.arrow_rows import arrow_frame
+
+# Bytes of bundle files per batch read partition: Spark's default
+# spark.sql.files.maxPartitionBytes. A larger file is read alone.
+PARTITION_BYTES = 128 * 1024 * 1024
 
 BUNDLE_SCHEMA = StructType(
     [
@@ -195,10 +204,13 @@ def check_source_health(
     return False
 
 
-def register_bundle_file_source(spark: SparkSession) -> None:
-    """Register the Spark 4 Python DataSource ``fhir_bundles``.
+def register_bundle_file_source(spark: SparkSession) -> type:
+    """Register the Spark 4 Python DataSource ``fhir_bundles`` and
+    return its class.
 
-    Batch: one partition per bundle file. Streaming: a
+    Batch: the sorted bundle files packed into consecutive partitions
+    of up to ``PARTITION_BYTES`` (``BundleFileDataSource.pack_files``),
+    each read file by file in order. Streaming: a
     SimpleDataSourceStreamReader whose offset is the count of files
     already ingested — new page files appearing in the directory flow
     into each micro-batch, turning the reference's poll loop into an
@@ -230,19 +242,37 @@ def register_bundle_file_source(spark: SparkSession) -> None:
             if res is not None:
                 yield (json.dumps(res, separators=(",", ":"), sort_keys=True),)
 
+    def pack_files(sized: list[tuple[str, int]]) -> list[list[str]]:
+        # Consecutive groups of (path, bytes) pairs, each of at most
+        # PARTITION_BYTES unless one file alone is larger.
+        groups: list[list[str]] = []
+        room = 0
+        for path, size in sized:
+            if not groups or size > room:
+                groups.append([])
+                room = PARTITION_BYTES
+            groups[-1].append(path)
+            room -= size
+        return groups
+
     class _BundlePartition(InputPartition):
-        def __init__(self, path: str) -> None:
-            self.path = path
+        def __init__(self, paths: list[str]) -> None:
+            self.paths = paths
 
     class _BundleReader(DataSourceReader):
         def __init__(self, options: dict) -> None:
             self.dir = options["path"]
 
         def partitions(self):  # noqa: D102
-            return [_BundlePartition(f) for f in bundle_files(self.dir)]
+            import os
+
+            sized = [(f, os.path.getsize(f)) for f in bundle_files(self.dir)]
+            return [_BundlePartition(paths) for paths in pack_files(sized)]
 
         def read(self, partition):  # noqa: D102
-            return bundle_rows(partition.path)
+            # Spark reads an empty partition list as one None partition.
+            for path in partition.paths if partition is not None else []:
+                yield from bundle_rows(path)
 
     class _BundleStreamReader(SimpleDataSourceStreamReader):
         def __init__(self, options: dict) -> None:
@@ -276,4 +306,6 @@ def register_bundle_file_source(spark: SparkSession) -> None:
         def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
             return _BundleStreamReader(self.options)
 
+    BundleFileDataSource.pack_files = staticmethod(pack_files)
     spark.dataSource.register(BundleFileDataSource)
+    return BundleFileDataSource

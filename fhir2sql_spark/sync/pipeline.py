@@ -23,10 +23,11 @@ the reference's doc comment src/main.rs:159-175):
 from __future__ import annotations
 
 import json
+import math
 from collections.abc import Callable
 from contextlib import closing
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
 from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -40,12 +41,31 @@ from fhir2sql_spark.sync.fhir import extract_versions, is_well_formed, partition
 
 # Parallelism of insert-pk allocation (buckets = concurrent tasks).
 _PK_BUCKETS = 64
+# Changed rows per apply task, up to one task per core: each task
+# starts a Python worker and opens a connection, which cost more than
+# writing a few hundred rows.
+_APPLY_TASK_ROWS = 500
 
 MIRROR_SCHEMA = StructType([
     StructField("table", StringType()),
     StructField("pk_id", IntegerType()),
     StructField("resource", StringType()),
 ])
+
+
+class _Kept:
+    """An open connection whose ``close`` is left to its opener, so
+    calls that each open and close one through a ``connect_fn`` can
+    share it."""
+
+    def __init__(self, conn) -> None:
+        self._conn = conn
+
+    def __getattr__(self, name: str):
+        return getattr(self._conn, name)
+
+    def close(self) -> None:
+        pass
 
 
 @dataclass
@@ -162,24 +182,35 @@ def sync_resources(
 def _sync_tables(
     spark: SparkSession, sources: dict[str, DataFrame], mirrors: dict[str, DataFrame | None],
     connect_fn: Callable[[], object], batch_size: int, strategy: str, apply_deletes: bool,
-    dialect: str,
+    dialect: str, create_tables: bool = False,
 ) -> dict[str, SyncStats]:
     """The one pass behind ``sync_resources`` and ``run_sync``:
     ``sources`` and ``mirrors`` map each mirror table to its raw source
     resources and its ``mirror_df`` (None: ``read_mirror_versions``).
+    ``create_tables`` runs the DDL bootstrap first, on the driver
+    connection that fetches the mirrors.
     Each source is scanned ONCE, into the cached ``tagged`` diff, while
     an ``Observation`` on the extracted union counts well-formed and
     malformed resources per table; ONE summary ``collect`` over
     ``tagged`` (unioned with the raw mirror pks) yields every table's op
     counts, insert-bucket counts and max pk; ONE ``foreachPartition``
-    job applies the ``(table, op, pk_id, resource)`` change-set, and
+    job applies the ``(table, op, pk_id, resource)`` change-set, in one
+    task per ``_APPLY_TASK_ROWS`` changed rows up to one per core, and
     none runs when the summary shows nothing to apply."""
     tables = list(sources)
     fetched = [t for t in tables if mirrors.get(t) is None]
-    mirror_raw = reduce(DataFrame.unionByName, [
+    mirror_parts = [
         m.select(F.lit(t).alias("table"), _mirror_pk(m).alias("pk_id"), "resource")
         for t, m in mirrors.items() if m is not None
-    ] + ([read_mirror_versions(spark, connect_fn, *fetched)] if fetched else []))
+    ]
+    if create_tables or fetched:
+        with closing(connect_fn()) as conn:
+            kept = partial(_Kept, conn)
+            if create_tables:
+                jdbc_upsert.create_mirror_tables(kept, tables, dialect=dialect)
+            if fetched:
+                mirror_parts.append(read_mirror_versions(spark, kept, *fetched))
+    mirror_raw = reduce(DataFrame.unionByName, mirror_parts)
     # The diff key is (table, res_key): ids repeat across types. Each
     # source is shuffled on it alone; the union keeps that partitioning
     # for the diff's join, and AQE runs each source's scan as its own
@@ -239,14 +270,16 @@ def _sync_tables(
         offset_col = F.from_json(F.lit(json.dumps(offsets)), "array<array<bigint>>")[
             table_no - 1][F.col("__bucket")]
         applied = [OP_INSERT, OP_UPDATE] + ([OP_DELETE] if apply_deletes else [])
+        n_changed = sum(ops[t][op] for t in tables for op in applied)
+        n_tasks = max(1, min(spark.sparkContext.defaultParallelism,
+                             math.ceil(n_changed / _APPLY_TASK_ROWS)))
         w_bucket = Window.partitionBy("table", "op", "__bucket").orderBy("res_key")
         changes = (
             tagged.where(F.col("op").isin(applied))
             .withColumn("__bucket", bucket)
-            # One apply partition per core: AQE would coalesce a small
-            # change-set into one partition, so one connection would
-            # write every table's rows alone.
-            .repartition(spark.sparkContext.defaultParallelism, "table", "op", "__bucket")
+            # A fixed count: AQE would coalesce a 2000-row initial load
+            # into one partition, which wrote it on one connection.
+            .repartition(n_tasks, "table", "op", "__bucket")
             .select(
                 "table",
                 "op",
@@ -299,16 +332,16 @@ def run_sync(
     """Per-type orchestration (R10, src/main.rs:303-339): bootstrap the
     DDL idempotently, then sync every resource type in ONE
     pass, each type into its own lowercase table
-    (src/main.rs:185). ``mirror_by_type`` optionally supplies a
+    (src/main.rs:185). The bootstrap and the mirror fetch share one
+    driver connection. ``mirror_by_type`` optionally supplies a
     distributed mirror DataFrame per resource type (the production
     JDBC-read path — see ``sync_resources``). ``parallel`` is accepted
     and ignored; it goes once the benchmark stops passing it."""
     tables = {rt: f"{table_prefix}{rt.lower()}" for rt in sources_by_type}
-    jdbc_upsert.create_mirror_tables(connect_fn, list(tables.values()), dialect=dialect)
     mirrors = mirror_by_type or {}
     stats = _sync_tables(
         spark, {tables[rt]: df for rt, df in sources_by_type.items()},
         {tables[rt]: mirrors.get(rt) for rt in tables}, connect_fn, batch_size,
-        "batched", True, dialect,
+        "batched", True, dialect, create_tables=True,
     )
     return {rt: stats[t] for rt, t in tables.items()}

@@ -13,7 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.sinks import jdbc_upsert
-from fhir2sql_spark.sources.rest_pages import read_bundles, register_bundle_file_source
+from fhir2sql_spark.sources.rest_pages import (
+    PARTITION_BYTES,
+    read_bundles,
+    register_bundle_file_source,
+)
 from fhir2sql_spark.sync.pipeline import SyncStats, run_sync, sync_resources
 
 
@@ -202,8 +206,27 @@ def test_bundle_file_datasource(spark, tmp_path):
     register_bundle_file_source(spark)
     df = spark.read.format("fhir_bundles").option("path", str(tmp_path)).load()
     assert df.count() == 60
-    # one partition per page file — the parallel-scan contract
-    assert df.rdd.getNumPartitions() == 3
+    # three small pages pack into one partition: one Python worker task
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_bundle_files_pack_by_bytes(spark, tmp_path):
+    """Files pack in their order into groups of at most the byte
+    target; a file larger than the target is a group of its own; an
+    empty directory has no partitions."""
+    source = register_bundle_file_source(spark)
+    pack, mb = source.pack_files, 1024 * 1024
+    assert PARTITION_BYTES == 128 * mb
+    assert pack([("a", 60 * mb), ("b", 68 * mb), ("c", 1), ("d", 128 * mb - 1)]) == [
+        ["a", "b"], ["c", "d"]]
+    assert pack([("a", 40 * mb), ("big", 300 * mb), ("b", 40 * mb), ("c", 88 * mb)]) == [
+        ["a"], ["big"], ["b", "c"]]
+    assert pack([(f"p{i}", mb) for i in range(300)]) == [
+        [f"p{i}" for i in range(128)], [f"p{i}" for i in range(128, 256)],
+        [f"p{i}" for i in range(256, 300)]]
+    assert pack([]) == []
+    assert source({"path": str(tmp_path)}).reader(None).partitions() == []
+    assert spark.read.format("fhir_bundles").load(str(tmp_path)).count() == 0
 
 
 def test_stage_and_merge_path(spark, sqlite_db):
@@ -908,6 +931,87 @@ def test_driver_fetched_frames_run_no_python_worker(spark, sqlite_db, local_rela
     assert sorted(r.pk_id for r in mirror.collect()) == [1, 2, 3, 4, 5]
     assert walk.count() == 120
     assert empty_mirror.count() == empty_walk.count() == 0
+
+
+def _write_pages(directory, resources, page_size=50):
+    """``resources`` as searchset bundle files in ``directory``,
+    replacing the files already there."""
+    directory.mkdir(exist_ok=True)
+    for old in directory.iterdir():
+        old.unlink()
+    for p in range(0, len(resources), page_size):
+        bundle = {"resourceType": "Bundle", "type": "searchset",
+                  "entry": [{"resource": r} for r in resources[p : p + page_size]]}
+        (directory / f"page_{p // page_size:04d}.json").write_text(json.dumps(bundle))
+
+
+def _counting(connect_fn, log_dir):
+    """``connect_fn`` leaving one file in ``log_dir`` per connection it
+    opens, on the driver or in a worker."""
+
+    def connect():
+        import os
+        import tempfile
+
+        os.close(tempfile.mkstemp(dir=log_dir)[0])
+        return connect_fn()
+
+    return connect
+
+
+def _last_stage_tasks(spark, stage0):
+    """Tasks of the last stage with completed tasks since ``stage0``."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    done = [info for sid in range(stage0, int(sc.dagScheduler().nextStageId()))
+            if (info := tracker.getStageInfo(sid)) is not None and info.numCompletedTasks]
+    return done[-1].numCompletedTasks
+
+
+def test_pass_python_tasks_and_connections(spark, sqlite_db, tmp_path):
+    """A four-type pass from bundle directories reads each small
+    directory in one partition. An initial load of 500 changed rows per
+    core applies in one task per core; a resync of a few changed rows
+    applies in one task, and run_sync opens three connections: the DDL
+    bootstrap with the mirror read, the apply, the count."""
+    from fhir2sql_spark.sync import pipeline
+
+    cores = spark.sparkContext.defaultParallelism
+    per_type = pipeline._APPLY_TASK_ROWS * cores // len(_TYPES)
+    versions = {rt: {f"{rt[:3]}-{i}": 1 for i in range(per_type)} for rt in _TYPES}
+    dirs = {rt: tmp_path / rt for rt in _TYPES}
+    log_dir = tmp_path / "connections"
+    log_dir.mkdir()
+    connect = _counting(sqlite_db, str(log_dir))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    register_bundle_file_source(spark)
+
+    def sync():
+        for rt, d in dirs.items():
+            _write_pages(d, [_resource(i, v, rt) for i, v in versions[rt].items()])
+        for old in log_dir.iterdir():
+            old.unlink()
+        sources = {rt: spark.read.format("fhir_bundles").load(str(d)) for rt, d in dirs.items()}
+        assert {df.rdd.getNumPartitions() for df in sources.values()} == {1}
+        stage0 = int(dag.nextStageId())
+        stats = run_sync(spark, sources, connect)
+        return stats, _last_stage_tasks(spark, stage0), len(list(log_dir.iterdir()))
+
+    stats, apply_tasks, _ = sync()
+    assert all(s.inserts == per_type and s.counts_match for s in stats.values())
+    assert apply_tasks == cores
+
+    versions["Patient"]["Pat-0"] = 2
+    versions["Observation"]["Obs-1"] = 3
+    del versions["Condition"]["Con-2"]
+    versions["Specimen"]["Spe-new"] = 1
+    stats, apply_tasks, connections = sync()
+    assert [(s.inserts, s.updates, s.deletes) for s in stats.values()] == [
+        (0, 1, 0), (1, 0, 0), (0, 1, 0), (0, 0, 1)]
+    assert all(s.counts_match for s in stats.values())
+    assert apply_tasks == 1
+    assert connections == 3
 
 
 def test_connect_with_retry_semantics():
