@@ -16,14 +16,17 @@ Spark-first re-expression, two tiers:
 
 2. ``BundleFileDataSource``: a Spark 4 Python DataSource reading a
    directory of bundle-JSON files. The batch reader packs the sorted
-   files into consecutive partitions of up to ``PARTITION_BYTES``
-   (Spark's default ``spark.sql.files.maxPartitionBytes``), as Spark's
-   own file sources do: each partition is one Python worker task, and
-   a task costs about 0.27 CPU-s to start whatever its row count
-   (SCALE.md, "Cost of one Python worker task"), so one task per
-   200-resource page spent more on start-up than on parsing. Large
-   page sets still spread over many tasks (the reference fetches
-   pages strictly serially).
+   files into consecutive partitions, each one Python worker task. A
+   task costs about 0.27 CPU-s to start whatever its row count (SCALE.md,
+   "Cost of one Python worker task"), so one task per 200-resource page
+   spent more on start-up than on parsing. The byte target per
+   partition is the split size Spark's file sources work out,
+   min(maxPartitionBytes, max(openCostInBytes, total bytes / cores)),
+   at Spark's defaults of 128 MB and 4 MB: a directory under 4 MB is one
+   task, and a larger one spreads over every core (the reference
+   fetches pages strictly serially). Unlike Spark, the reader charges no
+   4 MB open cost per file: with it, a 2 MB directory of ten pages
+   would still spread over four tasks on four cores.
 
 Row-level tolerance mirrors the reference: malformed resources are
 skipped, never fatal (src/main.rs:210-225); a page without ``entry``
@@ -42,9 +45,11 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from fhir2sql_spark.sources.arrow_rows import arrow_frame
 
-# Bytes of bundle files per batch read partition: Spark's default
-# spark.sql.files.maxPartitionBytes. A larger file is read alone.
-PARTITION_BYTES = 128 * 1024 * 1024
+# Bounds of the bytes of bundle files per batch read partition:
+# Spark's defaults of spark.sql.files.maxPartitionBytes and
+# spark.sql.files.openCostInBytes.
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+OPEN_COST_BYTES = 4 * 1024 * 1024
 
 BUNDLE_SCHEMA = StructType(
     [
@@ -204,13 +209,13 @@ def check_source_health(
     return False
 
 
-def register_bundle_file_source(spark: SparkSession) -> type:
-    """Register the Spark 4 Python DataSource ``fhir_bundles`` and
-    return its class.
+def register_bundle_file_source(spark: SparkSession) -> None:
+    """Register the Spark 4 Python DataSource ``fhir_bundles``.
 
     Batch: the sorted bundle files packed into consecutive partitions
-    of up to ``PARTITION_BYTES`` (``BundleFileDataSource.pack_files``),
-    each read file by file in order. Streaming: a
+    of up to min(``MAX_PARTITION_BYTES``, max(``OPEN_COST_BYTES``,
+    total bytes / cores)) each, unless one file alone is larger; a
+    partition reads its files in order. Streaming: a
     SimpleDataSourceStreamReader whose offset is the count of files
     already ingested — new page files appearing in the directory flow
     into each micro-batch, turning the reference's poll loop into an
@@ -242,19 +247,6 @@ def register_bundle_file_source(spark: SparkSession) -> type:
             if res is not None:
                 yield (json.dumps(res, separators=(",", ":"), sort_keys=True),)
 
-    def pack_files(sized: list[tuple[str, int]]) -> list[list[str]]:
-        # Consecutive groups of (path, bytes) pairs, each of at most
-        # PARTITION_BYTES unless one file alone is larger.
-        groups: list[list[str]] = []
-        room = 0
-        for path, size in sized:
-            if not groups or size > room:
-                groups.append([])
-                room = PARTITION_BYTES
-            groups[-1].append(path)
-            room -= size
-        return groups
-
     class _BundlePartition(InputPartition):
         def __init__(self, paths: list[str]) -> None:
             self.paths = paths
@@ -267,7 +259,17 @@ def register_bundle_file_source(spark: SparkSession) -> type:
             import os
 
             sized = [(f, os.path.getsize(f)) for f in bundle_files(self.dir)]
-            return [_BundlePartition(paths) for paths in pack_files(sized)]
+            per_core = sum(size for _, size in sized) // (os.cpu_count() or 1)
+            target = min(MAX_PARTITION_BYTES, max(OPEN_COST_BYTES, per_core))
+            parts: list[_BundlePartition] = []
+            room = 0
+            for path, size in sized:
+                if not parts or size > room:
+                    parts.append(_BundlePartition([]))
+                    room = target
+                parts[-1].paths.append(path)
+                room -= size
+            return parts
 
         def read(self, partition):  # noqa: D102
             # Spark reads an empty partition list as one None partition.
@@ -306,6 +308,4 @@ def register_bundle_file_source(spark: SparkSession) -> type:
         def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
             return _BundleStreamReader(self.options)
 
-    BundleFileDataSource.pack_files = staticmethod(pack_files)
     spark.dataSource.register(BundleFileDataSource)
-    return BundleFileDataSource

@@ -203,6 +203,10 @@ def _sync_tables(
         m.select(F.lit(t).alias("table"), _mirror_pk(m).alias("pk_id"), "resource")
         for t, m in mirrors.items() if m is not None
     ]
+    # The driver connection closes before the Spark jobs: a DuckDB file
+    # sink (sinks/duckdb_local.py) holds its writer lock from open to
+    # close, so the apply's executor connections would wait on it for
+    # good. The count after the apply opens its own.
     if create_tables or fetched:
         with closing(connect_fn()) as conn:
             kept = partial(_Kept, conn)

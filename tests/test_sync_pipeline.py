@@ -5,19 +5,17 @@ the fhir2sql-equivalent product exercised at its real surfaces."""
 from __future__ import annotations
 
 import json
+import os
 import sqlite3
 import threading
+from types import SimpleNamespace
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.sinks import jdbc_upsert
-from fhir2sql_spark.sources.rest_pages import (
-    PARTITION_BYTES,
-    read_bundles,
-    register_bundle_file_source,
-)
+from fhir2sql_spark.sources.rest_pages import read_bundles, register_bundle_file_source
 from fhir2sql_spark.sync.pipeline import SyncStats, run_sync, sync_resources
 
 
@@ -210,23 +208,36 @@ def test_bundle_file_datasource(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 1
 
 
-def test_bundle_files_pack_by_bytes(spark, tmp_path):
-    """Files pack in their order into groups of at most the byte
-    target; a file larger than the target is a group of its own; an
-    empty directory has no partitions."""
-    source = register_bundle_file_source(spark)
-    pack, mb = source.pack_files, 1024 * 1024
-    assert PARTITION_BYTES == 128 * mb
-    assert pack([("a", 60 * mb), ("b", 68 * mb), ("c", 1), ("d", 128 * mb - 1)]) == [
-        ["a", "b"], ["c", "d"]]
-    assert pack([("a", 40 * mb), ("big", 300 * mb), ("b", 40 * mb), ("c", 88 * mb)]) == [
-        ["a"], ["big"], ["b", "c"]]
-    assert pack([(f"p{i}", mb) for i in range(300)]) == [
-        [f"p{i}" for i in range(128)], [f"p{i}" for i in range(128, 256)],
-        [f"p{i}" for i in range(256, 300)]]
-    assert pack([]) == []
-    assert source({"path": str(tmp_path)}).reader(None).partitions() == []
-    assert spark.read.format("fhir_bundles").load(str(tmp_path)).count() == 0
+def test_bundle_files_pack_by_bytes(spark, tmp_path, monkeypatch):
+    """On 4 cores, files pack in their order into groups of at most
+    min(128 MB, max(4 MB, total / 4)); a file larger than that is a
+    group of its own; an empty directory has no partitions. The files
+    are sparse: the reader plans on their sizes alone."""
+    registered, mb = [], 1024 * 1024
+    register_bundle_file_source(
+        SimpleNamespace(dataSource=SimpleNamespace(register=registered.append))
+    )
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+
+    def packed(name, sizes_mb):
+        directory = tmp_path / name
+        directory.mkdir()
+        for i, size in reversed(list(enumerate(sizes_mb))):
+            with open(directory / f"p{i}.json", "wb") as fh:
+                fh.truncate(size * mb)
+        parts = registered[0]({"path": str(directory)}).reader(None).partitions()
+        return [[os.path.basename(f) for f in part.paths] for part in parts]
+
+    # under the 4 MB floor: one partition
+    assert packed("small", [1, 1, 1]) == [["p0.json", "p1.json", "p2.json"]]
+    # 40 MB over 4 cores: groups of at most 10 MB
+    assert packed("split", [6, 4, 1, 9, 10, 10]) == [
+        ["p0.json", "p1.json"], ["p2.json", "p3.json"], ["p4.json"], ["p5.json"]]
+    # 828 MB: the 128 MB cap, and a 600 MB file alone
+    assert packed("big", [100, 600, 40, 88]) == [["p0.json"], ["p1.json"], ["p2.json", "p3.json"]]
+    assert packed("empty", []) == []
+    register_bundle_file_source(spark)
+    assert spark.read.format("fhir_bundles").load(str(tmp_path / "empty")).count() == 0
 
 
 def test_stage_and_merge_path(spark, sqlite_db):
